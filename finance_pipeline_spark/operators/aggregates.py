@@ -30,31 +30,7 @@ def _dec(col: str | F.Column) -> F.Column:
     return c.cast("decimal(38,6)")
 
 
-# FLIPPED ON in r15 (prepped default-off in r14): the flagship's
-# decimal(38,6) sums paid an 8.8x tax at the 60M-row probe tier —
-# precision>18 decimals aggregate through byte-array BigDecimal
-# updates instead of Spark's compact-long path (interleaved A/B min:
-# double sums 0.90 s, decimal sums 7.93 s,
-# .probe_registered_1000x_b4_r14.json). The micro form keeps exactness
-# at 2.3x less wall: quantize each value to bigint MICROS (the house
-# micro-integer recipe), partial-sum as codegen long adds per
-# (group, spark_partition_id), then finish the tiny partial table as
-# decimal(38,0) — order-free. Overflow is LOUD, not silent (r14
-# advisor): the level-1 partials use try_sum (NULL on long overflow
-# even with ANSI off) and the finish raises on any NULL partial, so a
-# caller-coalesced giant partition fails the job instead of wrapping
-# past 2^63 (a 128 MB scan partition holds ~2M rows x ~1e10 micros ~
-# 2e16 << 2^63 — the guard only fires on pathological partitionings).
-# Quantum nuance, why the flip moved its oracle in lockstep: the micro
-# path rounds round(x*1e6) on the double product, the decimal path
-# rounds the decimal conversion of x — they can differ on 1-ulp edge
-# values (none exist in testdata: parity pinned value-identical at
-# both SFs by tests/test_aggregates.py::test_pricing_micro_agg_parity).
-_PRICING_MICRO_AGG = True
-
-# The DuckDB oracle that matches the micro path bit-for-bit, staged
-# next to the flag so the r15/r16 flip is one constant change plus an
-# oracle swap (pre-verified by the parity test against live DuckDB).
+# The DuckDB oracle that matches ``_pricing_summary_micro`` bit-for-bit.
 _PRICING_MICRO_ORACLE = """
     WITH f AS (
         SELECT l_returnflag, l_linestatus,
@@ -81,9 +57,28 @@ _PRICING_MICRO_ORACLE = """
 
 
 def _pricing_summary_micro(li: DataFrame) -> DataFrame:
-    """The flagship's two-level exact-micros formulation (see
-    ``_PRICING_MICRO_AGG``): level 1 long-sums per (group, partition)
-    inside whole-stage codegen, level 2 finishes in decimal."""
+    """The flagship's two-level exact-micros formulation: quantize each
+    value to bigint MICROS, long-sum per (group, spark_partition_id)
+    inside whole-stage codegen (level 1), then finish the tiny partial
+    table as decimal(38,0) (level 2) — exact and order-free.
+
+    Why not plain decimal(38,6) sums: precision>18 decimals aggregate
+    through byte-array BigDecimal updates instead of Spark's
+    compact-long path — an 8.8x tax at the 60M-row probe tier
+    (interleaved A/B min: double sums 0.90 s, decimal sums 7.93 s);
+    the micro form keeps exactness at 2.3x less wall than decimal.
+
+    Overflow is LOUD, not silent: the level-1 partials use try_sum
+    (NULL on long overflow even with ANSI off) and the finish raises on
+    any NULL partial, so a caller-coalesced giant partition fails the
+    job instead of wrapping past 2^63 (a 128 MB scan partition holds
+    ~2M rows x ~1e10 micros ~ 2e16 << 2^63).
+
+    Quantum nuance: this rounds round(x*1e6) on the double product,
+    where a decimal(38,6) sum rounds the decimal conversion of x — the
+    two can differ on 1-ulp edge values (none exist in testdata: pinned
+    value-identical to the decimal SQL at both SFs by
+    tests/test_aggregates.py::test_pricing_micro_agg_parity)."""
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     micros = {
@@ -139,31 +134,9 @@ def _pricing_summary_micro(li: DataFrame) -> DataFrame:
     )
 
 
-# The decimal-path oracle (the pre-r15 registered form), kept for the
-# parity pin and for anyone running the flag off.
-_PRICING_DECIMAL_ORACLE = """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)                        AS sum_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)                   AS sum_base_price,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS sum_disc_price,
-           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(38,6))) AS DOUBLE) AS sum_charge,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*)      AS avg_qty,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS avg_price,
-           CAST(SUM(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(*)      AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-"""
-
-
 @query(
     "agg_pricing_summary",
-    # callable: the oracle tracks the flag at ACCESS time (the r6
-    # lockstep rule), so the Spark path and the SQL can never desync
-    oracle=lambda: (
-        _PRICING_MICRO_ORACLE if _PRICING_MICRO_AGG else _PRICING_DECIMAL_ORACLE
-    ),
+    oracle=_PRICING_MICRO_ORACLE,
     tags=("agg", "flagship"),
     bench=True,
 )
@@ -171,28 +144,12 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship pricing summary (TPC-H Q1 shape): filter → 2-key groupBy
     → 8 aggregates. The scan reads only 7 columns (pruning), the
     shipdate filter pushes down, partial aggregation reduces ~600k rows
-    to |flag×status| per partition before the shuffle."""
+    to |flag×status| per partition before the shuffle; the sums are
+    exact micros (``_pricing_summary_micro``)."""
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2001-09-02 00:00:00").cast("timestamp")
     )
-    if _PRICING_MICRO_AGG:
-        return _pricing_summary_micro(li)
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
-    n = F.count(F.lit(1))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(_dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(_dec(disc_price)).cast("double").alias("sum_disc_price"),
-            F.sum(_dec(charge)).cast("double").alias("sum_charge"),
-            (F.sum(_dec("l_quantity")).cast("double") / n).alias("avg_qty"),
-            (F.sum(_dec("l_extendedprice")).cast("double") / n).alias("avg_price"),
-            (F.sum(_dec("l_discount")).cast("double") / n).alias("avg_disc"),
-            n.alias("count_order"),
-        )
-    )
+    return _pricing_summary_micro(li)
 
 
 @query(

@@ -2027,6 +2027,23 @@ def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _min_label_components(pairs)
 
 
+def _label_sum(labels: DataFrame):
+    """Convergence probe for ``_min_label_components``: the exact sum
+    of all labels (decimal(38,0), so no wrap). A NULL sum on a
+    non-empty frame (a decimal overflow with ANSI off, or a null label)
+    would compare equal to the previous NULL and declare a false
+    fixpoint — raise instead. An empty frame sums to NULL legitimately
+    (no edges: nothing to propagate)."""
+    s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
+    if s is None and not labels.isEmpty():
+        raise RuntimeError(
+            "min-label propagation: label sum is NULL on a non-empty "
+            "labels frame (decimal overflow or null label) — the "
+            "convergence check cannot be trusted"
+        )
+    return s
+
+
 def _min_label_components(pairs: DataFrame) -> DataFrame:
     """Min-label propagation over an undirected pair list → one
     (vec_id, component_id) row per edge-bearing vertex.
@@ -2078,11 +2095,6 @@ def _min_label_components(pairs: DataFrame) -> DataFrame:
         .agg(F.min("c0").alias("comp"))
         .localCheckpoint(eager=True)
     )
-
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("comp").cast("decimal(38,0)"))
-        ).first()[0]
 
     s_prev = _label_sum(labels)
     converged = False

@@ -348,10 +348,14 @@ class _BitReader:
         k = self.nbits // 8
         if k:
             # the 4-slot fill ring covers the current max lookahead
-            # (_fill_to(16) ⇒ nbits ≤ 23 ⇒ k ≤ 2); fail loudly if a
-            # future wider lookahead outgrows it instead of silently
-            # rewinding to the wrong byte (advisor r16)
-            assert k <= len(self.fills), "fill ring smaller than lookahead"
+            # (_fill_to(16) ⇒ nbits ≤ 23 ⇒ k ≤ 2); fail loudly (also
+            # under python -O) if a wider lookahead outgrows it instead
+            # of silently rewinding to the wrong byte
+            if k > len(self.fills):
+                raise RuntimeError(
+                    f"fill ring ({len(self.fills)} slots) smaller than "
+                    f"the buffered lookahead ({k} bytes)"
+                )
             self.pos = self.fills[4 - k]
         self.acc, self.nbits = 0, 0
         b = self.buf
@@ -557,6 +561,14 @@ def _entropy_encode(all_blocks, comps, mcux, mcuy, restart_interval) -> bytes:
         prev[newseg] = 0
         diff[m] = dcv - prev
     dsize = _bit_length_i64(diff)
+    if np.any(dsize > 11):
+        # Annex-K DC tables only define categories 0..11 (|diff| <=
+        # 2047); the zero-filled LUT would otherwise emit no bits
+        i = int(np.argmax(dsize > 11))
+        raise ValueError(
+            f"DC differential {int(diff[i])} exceeds the Annex-K Huffman "
+            f"envelope (category {int(dsize[i])} > 11)"
+        )
 
     # AC nonzeros: np.nonzero is row-major ⇒ already (block, k)-sorted
     bidx, kpos = np.nonzero(zz[:, 1:])

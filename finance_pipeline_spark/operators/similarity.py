@@ -87,12 +87,15 @@ def _spark_round_scaled(a: np.ndarray, dp: int) -> np.ndarray:
     exact integer, and parity with Spark's BigDecimal round silently
     breaks (measured divergence onset at |a| ≥ 9.007e6 for dp=9).
     Realistic embedding components sit many orders below the bound, so
-    the guard is a cheap assert, not a code path."""
+    the guard is a cheap check, not a code path; it raises (rather than
+    asserts) so it still fires under ``python -O``."""
     y = a * (10.0**dp)
-    assert not np.any(np.abs(y) >= 2.0**53), (
-        "_spark_round_scaled: |a|*10^dp >= 2^53 — scaled integers no "
-        "longer exact; route these values through the JVM window path"
-    )
+    if np.any(np.abs(y) >= 2.0**53):
+        raise ValueError(
+            "_spark_round_scaled: |a|*10^dp >= 2^53 — values are outside "
+            "the exact range of float64 scaled integers, so the rounding "
+            "cannot replay Spark's BigDecimal round"
+        )
     ay = np.abs(y)
     m = np.floor(ay + 0.5)
     # band where float arithmetic could disagree with the shortest-repr
@@ -795,8 +798,8 @@ def kmeans_lloyd_ctes() -> str:
                unnest(v.emb) AS x
         FROM a1 JOIN v USING (vec_id)
     ), c1m AS (
-        -- the _KMEANS_DECIMAL_MEANS recipe in lockstep: 9-dp pre-round,
-        -- exact decimal(38,12) sum (order-free), one divide, 6-dp round
+        -- kmeans_fit's mean recipe in lockstep: 9-dp pre-round, exact
+        -- decimal sum (order-free), one divide, 6-dp round
         SELECT cluster, pos,
                round(CAST(sum(CAST(round(x, 9) AS DECIMAL(38,12))) AS DOUBLE)
                      / count(*), 6) AS c
@@ -859,22 +862,21 @@ def _lloyd_partials(
     spark: SparkSession, e: DataFrame, cents_np: "np.ndarray"
 ) -> DataFrame:
     """One fused Lloyd-round pass: assign each vector to its cell
-    (4-dp Spark-parity-rounded squared L2, lowest cluster on ties —
-    bit-identical to the window form via ``_spark_round_scaled``) and
-    emit per-task PARTIAL mean sums ``(cluster, pos, psum, pcnt)``
-    instead of per-row assignment rows.
+    (4-dp Spark-parity-rounded squared L2 via ``_spark_round_scaled``,
+    lowest cluster on ties — the oracle's window-rank order) and emit
+    per-task PARTIAL mean sums ``(cluster, pos, psum, pcnt)`` instead
+    of per-row assignment rows.
 
-    This is the guide §2.3 "aggregate before you shuffle" shape: the
-    old path shuffled n×k scored rows through a window rank, joined
-    the winners back to the vectors, and exploded n×dim value rows
-    into the mean shuffle — three corpus-sized exchanges per round.
-    Here ONE kernel pass emits ≤ k×dim rows per task, so the round's
-    shuffle is partition-count-bound, not corpus-bound. Exactness is
-    preserved end to end: per-element 9-dp Spark-parity rounds become
-    exact scaled integers, summed as unbounded Python ints per task
-    and as decimal(38,9) across tasks — the same order-free decimal
-    recipe ``_mean_6dp`` pins (sum of identical rationals ⇒ identical
-    double after the final cast/divide/round in the JVM)."""
+    This is the "aggregate before you shuffle" shape: ONE
+    kernel pass emits ≤ k×dim rows per task, so the round's shuffle is
+    partition-count-bound, not corpus-bound (a window-rank assignment
+    plus a posexplode mean would shuffle three corpus-sized exchanges
+    per round). Exactness is preserved end to end: per-element 9-dp
+    Spark-parity rounds become exact scaled integers, summed as
+    unbounded Python ints per task and as decimal(38,9) across tasks —
+    the order-free decimal recipe ``kmeans_lloyd_ctes`` mirrors in
+    DuckDB (sum of identical rationals ⇒ identical double after the
+    final cast/divide/round in the JVM)."""
     bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(np.asarray(cents_np, dtype=np.float64))
     )
@@ -925,9 +927,9 @@ def _lloyd_assign_kernel(
     spark: SparkSession, e: DataFrame, cents_np: "np.ndarray"
 ) -> DataFrame:
     """(vec_id, cluster, dist): rank-1 Lloyd assignment as one Arrow
-    kernel pass — bit-parity with the window form (Spark-parity 4-dp
-    round, argmin ties → lowest cluster, dist = the winner's rounded
-    distance as the identical double)."""
+    kernel pass — bit-parity with the oracle's window rank (Spark-parity
+    4-dp round, argmin ties → lowest cluster, dist = the winner's
+    rounded distance as the identical double)."""
     bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(np.asarray(cents_np, dtype=np.float64))
     )
@@ -986,80 +988,26 @@ def kmeans_fit(
     """Lloyd's k-means over an (vec_id, embedding) frame — the
     reusable multi-round trainer behind ``kmeans_train_assign`` (whose
     oracle pins exactly rounds=1). Returns ``(centroids, assignments)``
-    with assignments = (vec_id, cluster, dist). Per round (under
-    ``_LLOYD_FUSED_KERNEL``, the r16 default): ONE broadcast-centroid
-    kernel pass emitting per-task partial mean sums — ≤ k×dim rows per
-    task — so nothing corpus-sized is shuffled; centroids stay
-    driver-side (k×dim). The pre-r16 window form (n×k scored rows →
-    window rank → join → posexplode → mean shuffle) is kept as the
-    flag-off path. Deterministic end to end and BIT-IDENTICAL across
-    the two paths: min-vec_id seeds, 4-dp Spark-parity rounded
-    distances with cluster-id tie-break, 6-dp rounded means over exact
-    decimal sums, empty clusters keep their previous centroid — so a
-    re-run (or another engine following the recipe) reproduces every
-    round bit-for-bit — including across the input spread, because the
-    decimal mean update is order-free."""
+    with assignments = (vec_id, cluster, dist). Per round: ONE
+    broadcast-centroid kernel pass emitting per-task partial mean sums
+    (``_lloyd_round``) — ≤ k×dim rows per task — so nothing
+    corpus-sized is shuffled; centroids stay driver-side (k×dim); the
+    final assignment is one argmin kernel pass. Deterministic end to
+    end: min-vec_id seeds, 4-dp Spark-parity rounded distances with
+    cluster-id tie-break, 6-dp rounded means over exact decimal sums
+    (9-dp pre-round, order-free), empty clusters keep their previous
+    centroid — so a re-run (or another engine following the recipe,
+    e.g. ``kmeans_lloyd_ctes``) reproduces every round bit-for-bit,
+    including across the input spread."""
     e = _spread_vectors(e)
     seeds = e.orderBy("vec_id").limit(k).collect()
     cents = np.array(
         [np.asarray(r["embedding"], dtype=np.float64) for r in seeds],
         dtype=np.float64,
     )
-
-    if _LLOYD_FUSED_KERNEL:
-        for _ in range(rounds):
-            cents = _lloyd_round(spark, e, cents)
-        return cents, _lloyd_assign_kernel(spark, e, cents)
-
-    def scores(cents_np: np.ndarray) -> DataFrame:
-        bc = spark.sparkContext.broadcast(cents_np)
-
-        def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            c_mat = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                x_mat = _emb_matrix(pdf["embedding"])
-                d = ((x_mat[:, None, :] - c_mat[None, :, :]) ** 2).sum(axis=2)
-                n, kk = d.shape
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ids, kk),
-                        "cluster": np.tile(np.arange(kk, dtype=np.int64), n),
-                        "d": d.ravel(),
-                    }
-                )
-
-        return e.mapInPandas(kern, "vec_id bigint, cluster bigint, d double")
-
-    def assign(cents_np: np.ndarray) -> DataFrame:
-        w = W.partitionBy("vec_id").orderBy(
-            F.col("dist").asc(), F.col("cluster").asc()
-        )
-        return (
-            scores(cents_np)
-            .withColumn("dist", F.round("d", 4))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") == 1)
-            .select("vec_id", "cluster", "dist")
-        )
-
     for _ in range(rounds):
-        upd = (
-            assign(cents)
-            .select("vec_id", "cluster")
-            .join(e, "vec_id")
-            .select("cluster", F.posexplode("embedding").alias("pos", "xf"))
-            .groupBy("cluster", "pos")
-            .agg(_mean_6dp(F.col("xf")).alias("c"))
-            .collect()
-        )
-        nxt = cents.copy()  # empty clusters keep their centroid (oracle COALESCE)
-        for r in upd:
-            nxt[r["cluster"], r["pos"]] = r["c"]
-        cents = nxt
-    return cents, assign(cents)
+        cents = _lloyd_round(spark, e, cents)
+    return cents, _lloyd_assign_kernel(spark, e, cents)
 
 
 # --- multi-probe IVF ---------------------------------------------------------
@@ -1116,104 +1064,50 @@ def _ivf_multiprobe_oracle(nprobe: int) -> str:
     """
 
 
-
-
-# FLIPPED ON in r15 (prepped default-off in r14, r13 verdict item 4):
-# _probe_cells selects cells in an executor-side Arrow kernel instead
-# of the queries × cells crossJoin + window rank — the remaining
-# row-heavy shape at the scaled tier (measured 9.25 s → 2.09 s on the
-# 200k coarse-assign pass with the spread). The kernel is
-# bit-parity-pinned against the JVM fold by
-# tests/test_similarity.py::test_probe_cells_kernel_bit_parity, and
-# the whole IVF family re-earned its driver window slots on the new
-# plan in r15 (dual-scale dry-run 8/8 in r14 before the flip).
-_PROBE_CELLS_KERNEL = True
-
-# r16 optimization flip: kmeans_fit runs each Lloyd round as ONE fused
-# Arrow kernel pass (assign + per-task partial decimal mean sums) and
-# the final assignment as one argmin kernel — instead of shuffling n×k
-# scored rows through a window rank plus an n×dim posexplode into the
-# mean shuffle (three corpus-sized exchanges per round). Bit-parity
-# with the window form is pinned by
-# tests/test_similarity.py::test_lloyd_fused_matches_window_path; the
-# Spark-round replica lives in _spark_round_scaled.
-_LLOYD_FUSED_KERNEL = True
-
-# r16 optimization flip, same shape for the PQ family: the Lloyd mean
-# update and the corpus encode run as single fused kernel passes
-# (_pq_partials / _pq_codes_kernel) instead of the n×m×k distance
-# fan-out → window rank → join-back → posexplode mean shuffle →
-# groupBy pivot chain. _pq_build keeps Spark-parity rounding (its
-# DuckDB oracle rounds JVM-side); the scaled tier keeps its documented
-# numpy-round semantics — both value-identical to the flag-off paths
-# (tests/test_similarity.py::test_pq_fused_matches_row_path).
-_PQ_FUSED_KERNEL = True
-
-# FLIPPED ON in r15 (prepped default-off in r14): the Lloyd mean
-# updates in kmeans_fit/_pq_build/_pq_train_encode_scaled are exact
-# and order-free — pre-round each value to 9 dp, sum as
-# decimal(38,12), divide once, round to the same 6 dp — so the
-# similarity-kernel input spread (``_spread_vectors``, the 4.4x
-# assign-pass win measured in .probe_ann_cap_r14.json) cannot move a
-# centroid through float-AVG summation order. The DuckDB oracles
-# (``kmeans_lloyd_ctes``, ``_pq_subspace_cte``) carry the SAME
-# decimal recipe in lockstep. Near-parity with the old float path
-# (<= one 6-dp ulp) + partitioning-independence pinned by
-# tests/test_similarity.py::test_kmeans_decimal_means_*.
-# NOTE (advisor r16): the FUSED kernels (_lloyd_partials /
-# _pq_partials / _fused_train_round — the _LLOYD_FUSED_KERNEL /
-# _PQ_FUSED_KERNEL defaults) pin the exact-decimal recipe
-# UNCONDITIONALLY; flipping this flag to False only changes the
-# flag-off window path's _mean_6dp. Treat the flag as documentation of
-# the recipe, not a runtime switch, unless the fused flags are off too.
-_KMEANS_DECIMAL_MEANS = True
-
-
 def _spread_vectors(df: DataFrame) -> DataFrame:
     """Spread (vec_id, embedding)-shaped kernel inputs across the
     cores before an Arrow kernel pass. Python-bound mapInPandas
     wall-clock is set by the PARTITION count, not the row count:
     parquet row-group skew left ~4 busy tasks on the 200k-vector
-    probe tier (coarse_assign 9.25 s → 2.09 s after the spread — the
+    probe tier (coarse assignment 9.25 s → 2.09 s after the spread — the
     multimodal/text kernels already do this). Safe on every result:
-    the kernels are per-row deterministic and the Lloyd means are
-    order-free under ``_KMEANS_DECIMAL_MEANS``. At real scale
-    maxPartitionBytes splits the scan anyway and this collapses to a
-    no-op-sized shuffle of narrow (id, vector) rows."""
+    the kernels are per-row deterministic, and every Lloyd mean update
+    (``_lloyd_partials``, ``_pq_partials``, ``_fused_train_round``)
+    pins the exact-decimal recipe — pre-round each value to 9 dp, sum
+    exactly as decimal, divide once, round to 6 dp — which is
+    order-free, so no partitioning can move a centroid. The DuckDB
+    oracles (``kmeans_lloyd_ctes``, ``_pq_subspace_cte``) carry the
+    same recipe in lockstep. At real scale maxPartitionBytes splits
+    the scan anyway and this collapses to a no-op-sized shuffle of
+    narrow (id, vector) rows."""
     spark = df.sparkSession
     key = "vec_id" if "vec_id" in df.columns else df.columns[0]
     return df.repartition(spark.sparkContext.defaultParallelism, key)
 
 
-def _mean_6dp(col: Column) -> Column:
-    """The Lloyd centroid mean at 6 dp — float AVG by default, the
-    exact-decimal order-free form under ``_KMEANS_DECIMAL_MEANS``."""
-    if _KMEANS_DECIMAL_MEANS:
-        total = F.sum(
-            F.round(col.cast("double"), 9).cast("decimal(38,12)")
-        )
-        return F.round(total.cast("double") / F.count(F.lit(1)), 6)
-    return F.round(F.avg(col.cast("double")), 6)
-
-
 def _probe_cells_kernel(cents, q: DataFrame, nprobe: int) -> DataFrame:
-    """Executor-side multi-probe cell selection: one mapInPandas pass
-    over the query partitions with the (driver-sized) centroid matrix
-    captured in the closure — no crossJoin row blow-up, no window
-    shuffle; each task emits exactly nprobe rows per query.
+    """Per query, the ``nprobe`` nearest k-means cells by centroid
+    distance — the shared multi-probe selection recipe (4-dp-rounded
+    sequential-fold distance + cluster tie-break, the exact
+    ``kmeans_fit`` assignment semantics, so both IVF families and
+    every oracle agree on cell choice). ``q`` must carry (query_id,
+    q_emb); extra columns ride through. Centroids are driver-sized.
 
-    Bit-parity with the JVM recipe, term by term:
+    One mapInPandas pass over the query partitions with the centroid
+    matrix captured in the closure — no crossJoin row blow-up, no
+    window shuffle; each task emits exactly nprobe rows per query.
+
+    The recipe, term by term (the oracles' ``round(list_sum(...), 4)``
+    + ``row_number() ORDER BY d, cluster`` rank):
     - cast-then-subtract: embeddings promote float32→float64 BEFORE
-      the diff, like zip_with's ``x.cast("double") - c``;
+      the diff;
     - ``np.add.accumulate(sq)[…, -1]`` is a strict sequential left
-      fold (running sum), the same addition order as ``F.aggregate``'s
-      acc + x chain — NOT np.sum, whose pairwise summation would
-      differ in ulps;
-    - rounding replays Spark's Round(HALF_UP on the shortest decimal
+      fold (running sum) over the squared diffs — NOT np.sum, whose
+      pairwise summation would differ in ulps;
+    - rounding replays Spark's Round (HALF_UP on the shortest decimal
       repr, i.e. BigDecimal.valueOf): Decimal(repr(x)).quantize(1e-4,
       ROUND_HALF_UP);
-    - ties on the rounded distance break by cluster asc, the window's
-      orderBy."""
+    - ties on the rounded distance break by cluster asc."""
     import numpy as np
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -1260,48 +1154,6 @@ def _probe_cells_kernel(cents, q: DataFrame, nprobe: int) -> DataFrame:
     return q.mapInPandas(kernel, out_schema)
 
 
-def _probe_cells(
-    spark: SparkSession, cents, q: DataFrame, nprobe: int
-) -> DataFrame:
-    """Per query, the ``nprobe`` nearest k-means cells by centroid
-    distance — the shared multi-probe selection recipe (4-dp-rounded
-    sequential-fold distance + cluster tie-break, the exact
-    ``kmeans_fit`` assignment semantics, so both IVF families and
-    every oracle agree on cell choice). ``q`` must carry (query_id,
-    q_emb); extra columns ride through. Centroids are driver-sized.
-
-    Two physical strategies, same semantics (bit-parity-pinned):
-    the JVM k-row broadcast crossJoin + window rank (default), or the
-    executor-side Arrow kernel (``_PROBE_CELLS_KERNEL`` — r15 flip;
-    see ``_probe_cells_kernel``)."""
-    if _PROBE_CELLS_KERNEL:
-        return _probe_cells_kernel(cents, q, nprobe)
-    cent_df = spark.createDataFrame(
-        [(int(c), [float(x) for x in cents[c]]) for c in range(len(cents))],
-        "cluster bigint, cent array<double>",
-    )
-    cent_dist = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("q_emb"),
-                F.col("cent"),
-                lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        4,
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("d").asc(), F.col("cluster").asc())
-    return (
-        q.crossJoin(F.broadcast(cent_df))
-        .withColumn("d", cent_dist)
-        .withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= nprobe)
-        .drop("cent", "d", "rnk")
-    )
-
-
 def ivf_probe_topk(
     spark: SparkSession, sf_dir: str, nprobe: int = _IVF_NPROBE
 ) -> DataFrame:
@@ -1312,9 +1164,9 @@ def ivf_probe_topk(
     closing nprobe=1's boundary blind spot (a true neighbor just
     across a Voronoi edge), the round-7 verdict's top retrieval gap.
 
-    Scale shape: centroids are driver-sized (k×dim) and join the query
-    set as a broadcast-tiny cross join — k rows per query, all-JVM
-    fold distance, rank, keep nprobe. The (query, cell) probe list
+    Scale shape: centroids are driver-sized (k×dim) and ride into one
+    Arrow kernel pass over the query set (``_probe_cells_kernel``) that
+    emits nprobe cells per query. The (query, cell) probe list
     then BROADCASTS against the corpus assignment scan (map-only on
     the big side), and only the ~nprobe/k corpus fraction reaches the
     cosine join. Per-query work scales with nprobe×|cell|, the FAISS
@@ -1329,7 +1181,7 @@ def ivf_probe_topk(
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    probes = _probe_cells(spark, cents, q, nprobe).select(
+    probes = _probe_cells_kernel(cents, q, nprobe).select(
         "query_id", "cluster", "q_emb", "q_nrm"
     )
     cand = assignments.select("vec_id", "cluster").join(
@@ -1393,7 +1245,7 @@ def _pq_subspace_cte(s: int) -> str:
                unnest(v.emb[{lo}:{hi}]) AS x
         FROM a_{s} a JOIN v USING (vec_id)
     ), cm_{s} AS (
-        -- the _KMEANS_DECIMAL_MEANS recipe in lockstep (see
+        -- kmeans_fit's mean recipe in lockstep (see
         -- kmeans_lloyd_ctes): order-free exact-decimal mean at 6 dp
         SELECT cluster, pos,
                round(CAST(sum(CAST(round(x, 9) AS DECIMAL(38,12))) AS DOUBLE)
@@ -1473,15 +1325,17 @@ def _pq_build(spark: SparkSession, sf_dir: str):
     float multiplies. Compose with the IVF cells (``ann_ivf_topk``)
     for cell-pruned PQ, FAISS's ``IVFPQ``.
 
-    Exact-parity recipe (the family standard): every kernel emits RAW
-    float64 distances; rounding (4 dp dists / 6 dp centroid means) and
-    argmin tie-breaks (rounded dist asc, code asc) happen JVM-side so
-    they match the DuckDB oracle bit-for-bit. Training mirrors
-    ``kmeans_train_assign`` per subspace: broadcast centroids, one
-    (vec, sub, code) distance pass, ONE (sub, code, pos) mean shuffle;
-    codebooks are driver-sized (4×8×16 doubles). Scoring broadcasts the
-    per-query distance tables as literal arrays — the corpus side is
-    one codes scan + element_at lookups, all codegen."""
+    Exact-parity recipe (the family standard): the Lloyd mean update
+    and the corpus encode are single fused kernel passes
+    (``_pq_mean_update`` / ``_pq_codes_kernel``) with Spark-parity
+    rounding (``_spark_round_scaled``: 4 dp dists, argmin ties →
+    lowest code; exact-decimal 6 dp centroid means), so they match the
+    DuckDB oracle bit-for-bit. Training mirrors ``kmeans_train_assign``
+    per subspace: broadcast centroids, ONE partial-sum pass, ONE
+    type-sized (sub, code, pos) mean shuffle; codebooks are
+    driver-sized (4×8×16 doubles). Scoring broadcasts the per-query
+    distance tables — the corpus side is one codes scan + element_at
+    lookups, all codegen."""
     e = _spread_vectors(
         load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     )
@@ -1493,74 +1347,8 @@ def _pq_build(spark: SparkSession, sf_dir: str):
         seed_mat.reshape(_PQ_K, _PQ_M, _PQ_DSUB).transpose(1, 0, 2).copy()
     )  # (m, k, dsub)
 
-    def sub_scores(c_now: np.ndarray) -> DataFrame:
-        bc = spark.sparkContext.broadcast(c_now)
-
-        def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            c_mat = bc.value  # (m, k, dsub)
-            m, k, _ = c_mat.shape
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                x = _emb_matrix(pdf["embedding"]).reshape(len(pdf), m, _PQ_DSUB)
-                # (n, m, k): squared L2 per subspace against every code
-                d = ((x[:, :, None, :] - c_mat[None, :, :, :]) ** 2).sum(axis=3)
-                n = len(ids)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ids, m * k),
-                        "sub": np.tile(np.repeat(np.arange(m, dtype=np.int64), k), n),
-                        "code": np.tile(np.arange(k, dtype=np.int64), n * m),
-                        "d": d.ravel(),
-                    }
-                )
-
-        return e.mapInPandas(kern, "vec_id bigint, sub bigint, code bigint, d double")
-
-    def assign(c_now: np.ndarray) -> DataFrame:
-        w = W.partitionBy("vec_id", "sub").orderBy(
-            F.col("dist").asc(), F.col("code").asc()
-        )
-        return (
-            sub_scores(c_now)
-            .withColumn("dist", F.round("d", 4))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") == 1)
-            .select("vec_id", "sub", "code")
-        )
-
-    if _PQ_FUSED_KERNEL:
-        # fused r16 path: one kernel pass per Lloyd step (Spark-parity
-        # rounding — bit-identical to the JVM window form below), no
-        # n×m×k fan-out, no window shuffle, no posexplode mean shuffle,
-        # no groupBy pivot
-        cents1 = _pq_mean_update(spark, e, cents, spark_parity=True)
-        codes = _pq_codes_kernel(spark, e, cents1, spark_parity=True)
-    else:
-        upd = (
-            assign(cents)
-            .join(e, "vec_id")
-            .select("sub", "code", F.posexplode("embedding").alias("pos", "xf"))
-            .filter(F.expr(f"pos div {_PQ_DSUB}") == F.col("sub"))
-            .groupBy("sub", "code", (F.col("pos") % _PQ_DSUB).alias("lpos"))
-            .agg(_mean_6dp(F.col("xf")).alias("c"))
-            .collect()
-        )
-        cents1 = cents.copy()  # empty codes keep their seed (oracle COALESCE)
-        for r in upd:
-            cents1[r["sub"], r["code"], r["lpos"]] = r["c"]
-
-        codes = (
-            assign(cents1)
-            .groupBy("vec_id")
-            .agg(
-                *[
-                    F.max(F.when(F.col("sub") == s, F.col("code"))).alias(f"c{s}")
-                    for s in range(_PQ_M)
-                ]
-            )
-        )
+    cents1 = _pq_mean_update(spark, e, cents, spark_parity=True)
+    codes = _pq_codes_kernel(spark, e, cents1, spark_parity=True)
 
     # Query distance tables, built EXECUTOR-SIDE (r12 verdict item 1:
     # this was the last driver-side per-query loop in the repo — a
@@ -1745,7 +1533,7 @@ def ivfpq_probe_topk(
     q = e.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    probes = _probe_cells(spark, cents, q, nprobe).select("query_id", "cluster")
+    probes = _probe_cells_kernel(cents, q, nprobe).select("query_id", "cluster")
     codes_c = codes.join(assignments.select("vec_id", "cluster"), "vec_id")
 
     term = lambda s: F.round(  # noqa: E731 — per-subspace 4-dp round, oracle parity
@@ -1952,12 +1740,13 @@ def _train_sample(e: DataFrame, n: int, target: int) -> DataFrame:
 def _pq_train_scaled(
     spark: SparkSession, sample: DataFrame, k_pq: int
 ) -> "np.ndarray":
-    """The TRAINING half of ``_pq_train_encode_scaled``: seeds = the
+    """Scaled-tier PQ codebook training on its own: seeds = the
     sample's ``k_pq`` xxhash64-smallest vec_ids per subspace, one Lloyd
-    round ON THE SAMPLE (assign → 6-dp-rounded mean update, empty codes
-    keep their seed). Returns the refined (m, k_eff, dsub) codebooks.
-    Split out so the scaled build paths can overlap this training with
-    the (independent) coarse k-means — see ``_train_scaled_quantizers``."""
+    round ON THE SAMPLE (numpy-round assignment → 6-dp exact-decimal
+    mean update, empty codes keep their seed). Returns the refined
+    (m, k_eff, dsub) codebooks. ``_train_scaled_quantizers`` fuses
+    this round with the coarse k-means into one pass; this standalone
+    form is the reference it is pinned bit-identical to."""
     seeds = (
         sample.orderBy(F.xxhash64(F.col("vec_id")), "vec_id")
         .limit(k_pq)
@@ -1969,24 +1758,7 @@ def _pq_train_scaled(
     k_eff = len(seed_mat)  # tiny corpora may have fewer rows than k_pq
     cents = seed_mat.reshape(k_eff, _PQ_M, _PQ_DSUB).transpose(1, 0, 2).copy()
 
-    if _PQ_FUSED_KERNEL:
-        # fused r16 path (numpy-round assignment, the scaled tier's
-        # documented semantics — values identical to the
-        # _pq_assign_rows → join → posexplode → mean chain below)
-        return _pq_mean_update(spark, sample, cents, spark_parity=False)
-    upd = (
-        _pq_assign_rows(spark, sample, cents)
-        .join(sample, "vec_id")
-        .select("sub", "code", F.posexplode("embedding").alias("pos", "xf"))
-        .filter(F.expr(f"pos div {_PQ_DSUB}") == F.col("sub"))
-        .groupBy("sub", "code", (F.col("pos") % _PQ_DSUB).alias("lpos"))
-        .agg(_mean_6dp(F.col("xf")).alias("c"))
-        .collect()
-    )
-    cents1 = cents.copy()  # empty codes keep their seed
-    for r in upd:
-        cents1[r["sub"], r["code"], r["lpos"]] = r["c"]
-    return cents1
+    return _pq_mean_update(spark, sample, cents, spark_parity=False)
 
 
 def _fused_train_round(
@@ -1996,10 +1768,9 @@ def _fused_train_round(
     pq_cents: "np.ndarray",
 ):
     """Coarse-Lloyd AND PQ-Lloyd round-1 mean updates in ONE kernel
-    pass over the (already spread) training sample — the r17 collapse
-    of the scaled trainer's barrier chain (guide §2.4: two operations
-    over the same input can share one pass; r16's 2-thread overlap
-    only HID the second chain's latency, this removes the chain).
+    pass over the (already spread) training sample: two operations over
+    the same input share one pass instead of two independent job
+    chains.
 
     The kernel body is the union of ``_lloyd_partials`` and
     ``_pq_partials(spark_parity=False)`` verbatim — same raw-distance
@@ -2010,8 +1781,7 @@ def _fused_train_round(
     chains. Exactness makes the fusion bit-identical: each side's
     accumulators never read the other's state, and the decimal mean
     recipe is order-free, so partition/batch interleaving cannot move
-    a centroid (the ``_KMEANS_DECIMAL_MEANS`` invariant; the fused
-    kernels pin that recipe unconditionally — see the flag comment)."""
+    a centroid (see ``_spread_vectors``)."""
     bc = spark.sparkContext.broadcast((
         np.ascontiguousarray(np.asarray(cents_np, dtype=np.float64)),
         np.ascontiguousarray(np.asarray(pq_cents, dtype=np.float64)),
@@ -2127,28 +1897,13 @@ def _train_scaled_quantizers(
        round's mean updates (``_fused_train_round``).
     3. Coarse round 2 polishes the spread seeds (``_lloyd_round``).
 
-    The pre-r17 shape ran two independent chains (2 + 3 barriers)
-    overlapped from a 2-thread pool; overlap hides the shorter chain
-    but keeps 5 jobs' scheduling on the driver — at the bench tier the
-    ANN trainers ran FASTER on 8 cores than 32 (PERF_r16 scaling 0.82)
-    precisely because the wall is sequential driver jobs, not compute.
-    Results are bit-identical: both trainers are deterministic
-    functions of the checkpointed sample, the kernels reuse the
-    per-side expressions verbatim, and the decimal mean recipe is
-    order-free. The flag-off path keeps the overlapped form."""
-    if not (_LLOYD_FUSED_KERNEL and _PQ_FUSED_KERNEL):
-        from concurrent.futures import ThreadPoolExecutor
-
-        hashed = sample.select(
-            F.xxhash64(F.col("vec_id")).alias("vec_id"), "embedding"
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_coarse = pool.submit(kmeans_fit, spark, hashed, k_cells, 2)
-            f_pq = pool.submit(_pq_train_scaled, spark, sample, k_pq)
-            cents, _ = f_coarse.result()
-            cents1 = f_pq.result()
-        return cents, cents1
-
+    The result is bit-identical to the sequential composition —
+    ``kmeans_fit`` over xxhash64-remapped ids (rounds=2) for the coarse
+    side and ``_pq_train_scaled`` for the PQ side: both trainers are
+    deterministic functions of the checkpointed sample, the kernels
+    reuse the per-side expressions verbatim, and the decimal mean
+    recipe is order-free. Barriers, not compute, set this wall: at the
+    bench tier the ANN trainers ran FASTER on 8 cores than 32."""
     top = (
         sample.select(
             F.xxhash64(F.col("vec_id")).alias("h"), "vec_id", "embedding"
@@ -2173,152 +1928,17 @@ def _train_scaled_quantizers(
     return cents, cents1
 
 
-def _pq_train_encode_scaled(
-    spark: SparkSession,
-    e: DataFrame,
-    sample: DataFrame,
-    k_pq: int,
-    coarse_cents: "np.ndarray | None" = None,
-    cents1: "np.ndarray | None" = None,
-):
-    """Parameterized PQ trainer/encoder (the ``_pq_build`` recipe with
-    a corpus-sized codebook): ``_pq_train_scaled``'s one-Lloyd-round
-    codebooks (or a pre-trained ``cents1`` from the overlapped path)
-    encode the FULL corpus. Returns ``(codes_df, cents1)`` with
-    codes = (vec_id, c0..c3).
-
-    Scale shape: codebooks are driver-sized (m x k_pq x dsub <= 4 x
-    256 x 16 doubles = 128 KiB) and broadcast; assignment is one
-    Arrow-batched vectorized kernel pass emitting the per-subspace
-    argmin directly (n x m rows, never the n x m x k distance
-    fan-out — at k=256 the fan-out would be 64x the corpus).
-
-    Seeds are drawn in xxhash64 order (deterministic pseudo-random),
-    not smallest-id order: id-correlated corpora would otherwise seed
-    every code from one neighborhood (see the coarse-quantizer note in
-    ``ivfpq_scaled_topk``)."""
-    if cents1 is None:
-        cents1 = _pq_train_scaled(spark, sample, k_pq)
-
-    if coarse_cents is not None:
-        if _PQ_FUSED_KERNEL:
-            # complete index row (vec_id, c0..c3, cluster) in ONE
-            # corpus pass — no second kernel, no vec_id glue join
-            return (
-                _pq_codes_kernel(
-                    spark, e, cents1, spark_parity=False,
-                    coarse_cents=coarse_cents,
-                ),
-                cents1,
-            )
-        return (
-            _pq_assign_codes(spark, e, cents1).join(
-                coarse_assign(spark, e, coarse_cents), "vec_id"
-            ),
-            cents1,
-        )
-    return _pq_assign_codes(spark, e, cents1), cents1
-
-
-def coarse_assign(
-    spark: SparkSession, e: DataFrame, cents
-) -> DataFrame:
-    """(vec_id, cluster): each vector's rank-1 coarse cell — 4-dp-
-    rounded squared L2 asc, cluster asc on ties — as ONE vectorized
-    broadcast-centroid argmin kernel emitting a single row per vector.
-    The window form (``_probe_cells`` at nprobe=1) materializes and
-    shuffles n x k rows just to keep rank 1 — at the 4096-cell cap
-    that's a 4096x corpus blow-up on the encode path (review finding
-    r9); queries keep ``_probe_cells`` because they need nprobe > 1
-    and are few.
-
-    Near-parity caveat (advisor r9): this kernel rounds with numpy
-    ``np.round`` (banker's) over the expanded ||x||²-2x·c+||c||² form,
-    while ``_probe_cells`` rounds with Spark ``F.round`` (HALF_UP)
-    over a sequential (x-c)² fold — a vector whose two nearest cells
-    tie at exactly 4 dp, or whose distance differs between the two
-    float summation orders at the 4th decimal, can be ASSIGNED to a
-    cell the query-side probe RANKING disagrees with. Recall-only
-    effect (a probed query still reaches the vector unless the
-    disagreeing cell falls outside nprobe), no oracle touches this
-    path, and the recall tests + 10x probe measure through it — but
-    the two paths are near-parity, not bit-parity."""
-    e = _spread_vectors(e)
-    c_mat = np.asarray(cents, dtype=np.float64)
-    bc = spark.sparkContext.broadcast(c_mat)
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm = bc.value  # (k, dim)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = _emb_matrix(pdf["embedding"])
-            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2, rounded like the
-            # sequential fold; argmin takes the lowest cluster on ties
-            d = np.round(
-                (x * x).sum(axis=1)[:, None]
-                - 2.0 * (x @ cm.T)
-                + (cm * cm).sum(axis=1)[None, :],
-                4,
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids,
-                    "cluster": d.argmin(axis=1).astype(np.int64),
-                }
-            )
-
-    return e.mapInPandas(kern, "vec_id bigint, cluster bigint")
-
-
-def _pq_assign_rows(
-    spark: SparkSession, src: DataFrame, c_now: "np.ndarray"
-) -> DataFrame:
-    """(vec_id, sub, code) PQ assignment rows against codebooks
-    ``c_now`` (m, k, dsub) — one Arrow-batched vectorized argmin kernel
-    pass (4-dp-rounded distance, lowest code on ties — the family's
-    oracle-parity rule). Shared by the trainer's Lloyd update, corpus
-    encoding, and the stored index's incremental ``add``."""
-    src = _spread_vectors(src)
-    bc = spark.sparkContext.broadcast(c_now)
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        c_mat = bc.value  # (m, k, dsub)
-        m = c_mat.shape[0]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = _emb_matrix(pdf["embedding"]).reshape(len(pdf), m, _PQ_DSUB)
-            d = np.round(
-                ((x[:, :, None, :] - c_mat[None, :, :, :]) ** 2).sum(axis=3),
-                4,
-            )
-            code = d.argmin(axis=2)  # ties -> lowest code (argmin)
-            n_rows = len(ids)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(ids, m),
-                    "sub": np.tile(np.arange(m, dtype=np.int64), n_rows),
-                    "code": code.astype(np.int64).ravel(),
-                }
-            )
-
-    return src.mapInPandas(kern, "vec_id bigint, sub bigint, code bigint")
-
-
 def _pq_sub_assign(
     x: "np.ndarray", c_mat: "np.ndarray", spark_parity: bool
 ) -> "np.ndarray":
     """(n, m) winning PQ code per (vector, subspace): 4-dp-rounded
     squared L2 asc, lowest code on ties. ``spark_parity`` picks the
     rounding replica: Spark ``F.round`` HALF_UP (``_spark_round_scaled``
-    — the oracle-checked ``_pq_build`` chain rounds JVM-side) vs numpy
-    banker's ``np.round`` (the scaled tier's documented near-parity
-    semantics, unchanged from ``_pq_assign_rows``). The raw-distance
-    expression is shared verbatim so float summation order never
-    drifts between the two."""
+    — the oracle-checked ``_pq_build`` chain, whose DuckDB oracle
+    rounds HALF_UP) vs numpy banker's ``np.round`` (the scaled tier's
+    documented near-parity semantics). The raw-distance expression is
+    shared verbatim so float summation order never drifts between the
+    two."""
     m = c_mat.shape[0]
     xs = x.reshape(len(x), m, _PQ_DSUB)
     d = ((xs[:, :, None, :] - c_mat[None, :, :, :]) ** 2).sum(axis=3)
@@ -2431,13 +2051,22 @@ def _pq_codes_kernel(
     the groupBy pivot shuffle (n×m rows through an exchange just to be
     re-assembled into the row they started from).
 
-    With ``coarse_cents``, the coarse IVF cell rides along in the SAME
-    pass (the exact ``coarse_assign`` expression — expanded-form
-    squared L2, numpy 4-dp round, argmin), so the IVFPQ encode emits
-    the complete index row per vector: the old shape ran two separate
-    corpus kernels and shuffled BOTH outputs through a vec_id join
-    just to glue columns back together (guide §2.4 — remove shuffles
-    outright; this is how a one-pass FAISS encode behaves)."""
+    With ``coarse_cents``, the coarse IVF cell (rank-1: 4-dp-rounded
+    squared L2 asc, cluster asc on ties) rides along in the SAME pass,
+    so the IVFPQ encode emits the complete index row per vector — no
+    second corpus kernel, no vec_id join to glue columns back together
+    (this is how a one-pass FAISS encode behaves).
+
+    Near-parity caveat: the coarse cell rounds with numpy ``np.round``
+    (banker's) over the expanded ||x||²-2x·c+||c||² form, while
+    ``_probe_cells_kernel`` rounds HALF_UP over a sequential (x-c)²
+    fold — a vector whose two nearest cells tie at exactly 4 dp, or
+    whose distance differs between the two float summation orders at
+    the 4th decimal, can be ASSIGNED to a cell the query-side probe
+    RANKING disagrees with. Recall-only effect (a probed query still
+    reaches the vector unless the disagreeing cell falls outside
+    nprobe); no oracle touches this path, and the recall tests measure
+    through it."""
     src = _spread_vectors(src)
     bc = spark.sparkContext.broadcast(
         np.ascontiguousarray(np.asarray(c_now, dtype=np.float64))
@@ -2470,8 +2099,8 @@ def _pq_codes_kernel(
             for s in range(c_mat.shape[0]):
                 out[f"c{s}"] = code[:, s].astype(np.int64)
             if cm is not None:
-                # coarse_assign's expression verbatim (expanded form,
-                # numpy round, lowest cluster on argmin ties)
+                # expanded form, numpy round, lowest cluster on
+                # argmin ties (see the near-parity caveat above)
                 d = np.round(
                     (x * x).sum(axis=1)[:, None]
                     - 2.0 * (x @ cm.T)
@@ -2515,26 +2144,6 @@ def _pq_recon_error(
     return src.mapInPandas(kern, "vec_id bigint, err double")
 
 
-def _pq_assign_codes(
-    spark: SparkSession, src: DataFrame, c_now: "np.ndarray"
-) -> DataFrame:
-    """(vec_id, c0..c3) one-row-per-vector PQ codes — the direct
-    argmin kernel under ``_PQ_FUSED_KERNEL`` (no n×m fan-out + pivot
-    shuffle), the row-form pivot otherwise; values identical."""
-    if _PQ_FUSED_KERNEL:
-        return _pq_codes_kernel(spark, src, c_now, spark_parity=False)
-    return (
-        _pq_assign_rows(spark, src, c_now)
-        .groupBy("vec_id")
-        .agg(
-            *[
-                F.max(F.when(F.col("sub") == s, F.col("code"))).alias(f"c{s}")
-                for s in range(_PQ_M)
-            ]
-        )
-    )
-
-
 def ivfpq_scaled_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -2560,7 +2169,8 @@ def ivfpq_scaled_topk(
     ``train_cap=None`` for the unbounded form); corpus encode
     is one vectorized argmin kernel
     pass (n x m assignment rows, not an n x m x k fan-out); cell
-    assignment and probe selection are broadcast-centroid JVM folds;
+    assignment and probe selection are broadcast-centroid Arrow
+    kernel passes;
     serving scans ~nprobe/k_cells of the corpus codes per query and
     fetches 5k raw vectors per query for the refine."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2573,8 +2183,7 @@ def ivfpq_scaled_topk(
     )
 
     # coarse quantizer: sqrt(N) cells trained on the sample, then the
-    # FULL corpus assigned to its rank-1 cell (the kmeans_fit
-    # assignment semantics via the shared _probe_cells fold).
+    # FULL corpus assigned to its rank-1 cell in the encode pass.
     # Seeding: kmeans_fit seeds with its k SMALLEST ids — fine for the
     # oracle-pinned k=8 queries, degenerate at k=sqrt(N) when ids
     # correlate with content (a blob-ordered corpus puts every seed in
@@ -2583,17 +2192,15 @@ def ivfpq_scaled_topk(
     # smallest" a deterministic pseudo-random draw across the corpus;
     # a second Lloyd round then polishes the spread seeds. The hashed
     # ids only feed seeding/assignment-internal keys — cents is all we
-    # consume. Coarse and PQ training overlap (independent given the
-    # checkpointed sample — _train_scaled_quantizers).
+    # consume. Coarse and PQ training share one fused pass
+    # (_train_scaled_quantizers).
     cents, cents1 = _train_scaled_quantizers(
         spark, sample, p["k_cells"], p["k_pq"]
     )
 
-    # one corpus encode pass emits (vec_id, c0..c3, cluster) complete —
-    # the pre-r16 shape ran coarse_assign as a SECOND corpus kernel and
-    # shuffled both outputs through a vec_id join just to glue columns
-    codes_c, _ = _pq_train_encode_scaled(
-        spark, e, sample, p["k_pq"], coarse_cents=cents, cents1=cents1
+    # one corpus encode pass emits (vec_id, c0..c3, cluster) complete
+    codes_c = _pq_codes_kernel(
+        spark, e, cents1, spark_parity=False, coarse_cents=cents
     )
 
     q = (
@@ -2637,7 +2244,7 @@ def ivfpq_serve(
     operator (``ivfpq_scaled_topk``) and the stored vector index
     (``pipelines/ann_index.CorpusAnnIndex.search``) so the two serving
     paths cannot drift. ``q`` carries (query_id, q_emb)."""
-    probes = _probe_cells(spark, cents, q, nprobe).select(
+    probes = _probe_cells_kernel(cents, q, nprobe).select(
         "query_id", "cluster"
     )
 
@@ -2797,10 +2404,7 @@ def ann_index_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identity: a stale on-disk index built under an older recipe
     # (different train cap, float-vs-decimal means, probe kernel)
     # would otherwise serve pre-flip state and break ann_serve_parity
-    recipe = (
-        f"v2-cap{_SCALED_TRAIN_CAP}-dm{int(_KMEANS_DECIMAL_MEANS)}"
-        f"-pk{int(_PROBE_CELLS_KERNEL)}"
-    )
+    recipe = f"v2-cap{_SCALED_TRAIN_CAP}-dm1-pk1"
     key = hashlib.sha256(
         f"{src.resolve()}-{st.st_mtime_ns}-{st.st_size}-{recipe}".encode()
     ).hexdigest()[:16]

@@ -124,9 +124,9 @@ class CorpusAnnIndex:
         sample = _train_sample(e, n, p["train_target"]).localCheckpoint(
             eager=True
         )
-        # coarse and PQ training overlap (independent given the
-        # checkpointed sample) — the exact recipe the batch operator
-        # runs through the same helper, so parity is preserved
+        # coarse and PQ training share one fused pass — the exact
+        # recipe the batch operator runs through the same helper, so
+        # parity is preserved
         cents, cents1 = _train_scaled_quantizers(
             self.spark, sample, p["k_cells"], p["k_pq"]
         )

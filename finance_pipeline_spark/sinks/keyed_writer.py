@@ -19,9 +19,9 @@ concurrent writers, so a ``writer_lock`` (O_EXCL lockfile) makes a
 second concurrent writer fail LOUDLY (``ConcurrentWriteError``)
 instead of silently double-inserting; the reference itself is a
 single-writer daily batch (GitHub Actions cron), and a true
-multi-writer deployment swaps the ``KeyedTable`` class below for a
-transactional format (Delta ``MERGE WHEN NOT MATCHED``) behind the
-same ``merge`` call.
+multi-writer deployment uses ``sinks.txn_table.TxnKeyedTable`` (a
+Delta-protocol commit log with ``MERGE WHEN NOT MATCHED`` semantics)
+instead.
 
 K6's bulk-then-row-loop fallback collapses away: the anti-join gives
 the intended "insert new, skip dupes, count both" uniformly (the
@@ -80,10 +80,10 @@ def read_table(spark: SparkSession, path: str) -> DataFrame | None:
 
 class ConcurrentWriteError(RuntimeError):
     """A second writer attempted a keyed append while another held the
-    table's writer lock. The parquet KeyedTable is single-writer by
-    design (see class docstring); this error is the loud alternative to
-    the silent double-insert two interleaved writers would otherwise
-    produce."""
+    table's writer lock. The parquet keyed table is single-writer by
+    design (see the module docstring); this error is the loud
+    alternative to the silent double-insert two interleaved writers
+    would otherwise produce."""
 
 
 @contextmanager
@@ -101,7 +101,7 @@ def writer_lock(path: str, owner: str = ""):
     deliberate (auto-takeover would reintroduce the race); an operator
     confirms the dead writer and removes the file. Object stores
     without atomic create-if-absent need the transactional-format
-    upgrade path instead (Delta MERGE, class docstring below)."""
+    upgrade path instead (``TxnKeyedTable``, module docstring)."""
     import os
     import time
 
@@ -212,53 +212,6 @@ def _footer_row_count(parts) -> int:
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-
-
-class KeyedTable:
-    """The merge seam for keyed idempotent writes.
-
-    ``merge(incoming)`` = insert rows whose key is absent, skip the
-    rest, report both counts — the reference's ``INSERT OR IGNORE``
-    semantic as a table-format-agnostic interface. This parquet
-    implementation does snapshot-read → anti-join → staged append,
-    which is correct for a SINGLE writer (the reference's deployment: a
-    daily cron). It is NOT atomic across concurrent writers, so the
-    whole critical section runs under ``writer_lock``: a second
-    concurrent ``merge`` raises ``ConcurrentWriteError`` instead of
-    silently inserting the same key twice (exercised in
-    tests/test_pipelines.py::test_concurrent_writers_fail_loudly).
-
-    A multi-writer deployment swaps this class for
-    ``sinks.txn_table.TxnKeyedTable`` — the same one-call ``merge``
-    surface over a Delta-protocol commit log (versioned atomic
-    commits, optimistic concurrency with conflict re-validation,
-    snapshot-isolated reads) — or, where delta-spark is available,
-    Delta Lake itself::
-
-        DeltaTable.forPath(spark, path).alias("t").merge(
-            incoming.alias("i"), "<keys equal>"
-        ).whenNotMatchedInsertAll().execute()
-
-    Everything upstream of the writer is format-agnostic — pipelines
-    depend only on ``merge``.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, keys: list[str]):
-        self.spark = spark
-        self.path = path
-        self.keys = list(keys)
-
-    def exists(self) -> bool:
-        return table_exists(self.path)
-
-    def read(self) -> DataFrame | None:
-        return read_table(self.spark, self.path)
-
-    def merge(self, incoming: DataFrame) -> WriteStats:
-        return idempotent_append(self.spark, incoming, self.path, self.keys)
-
-    def drop(self) -> bool:
-        return drop_table(self.path)
 
 
 def top_rows(spark: SparkSession, path: str, order_cols, n: int = 10) -> DataFrame:

@@ -1,8 +1,9 @@
 """Transactional keyed table — a minimal Delta-style commit log over
 parquet, giving the reference's ``UNIQUE`` + ``INSERT OR IGNORE``
 semantic (etl/csv_loader.py:133,148-218) ENGINE-enforced atomicity
-under CONCURRENT writers, not writer-discipline (the plain
-``KeyedTable``) or fail-fast locking (``writer_lock``).
+under CONCURRENT writers, not writer-discipline (the plain parquet
+``keyed_writer.idempotent_append``) or fail-fast locking
+(``writer_lock``).
 
 Design (from the public Delta Lake protocol / paper — "Delta Lake:
 High-Performance ACID Table Storage over Cloud Object Stores",
@@ -395,9 +396,8 @@ class TxnKeyedTable:
     """``merge(incoming)`` = atomically insert rows whose key is absent,
     skip the rest, report both counts — safe under concurrent writers.
 
-    Same one-call surface as ``KeyedTable.merge`` so pipelines swap
-    between the single-writer parquet table and this transactional one
-    without touching anything upstream.
+    Returns the same ``WriteStats`` accounting as the single-writer
+    ``keyed_writer.idempotent_append``.
     """
 
     def __init__(self, spark: SparkSession, path: str, keys: list[str]):

@@ -3,19 +3,16 @@
 The reference reads CSVs with inferred dtypes (pd.read_csv at
 etl/csv_loader.py:49,90); here every scan declares its schema — on a
 cluster, inference is an extra full pass over 100 TB and a schema
-drift hazard. The empty-input guard mirrors ``df.empty``
-(etl/csv_loader.py:91-93) without collecting: ``isEmpty`` looks at the
-first non-empty partition only.
+drift hazard. The reference's empty-input guard (``df.empty``,
+etl/csv_loader.py:91-93) runs in ``pipelines.csv_pipeline`` as
+``isEmpty`` on the transformed window, which looks at the first
+non-empty partition only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from finance_pipeline_spark.logging_utils import get_logger
-
-log = get_logger(__name__)
 
 
 def read_csv(
@@ -32,15 +29,3 @@ def read_csv(
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
-
-
-def read_csv_nonempty(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame | None:
-    """S2 with the reference's empty-input guard: returns None for an
-    empty frame so pipelines can bail early (etl/csv_loader.py:91-93)."""
-    df = read_csv(spark, path, schema)
-    if df.isEmpty():
-        log.warning("Loaded DataFrame is empty: %s", path)
-        return None
-    return df

@@ -91,7 +91,8 @@ def http_fetcher(
                     url, attempt + 1, retries + 1, last, pause,
                 )
                 wait(pause)
-        assert last is not None
+        if last is None:  # the loop never ran
+            raise ValueError(f"retries must be >= 0, got {retries}")
         raise last
 
     return fetch

@@ -47,45 +47,53 @@ def test_pricing_summary_internal_consistency(spark, sf_dir):
         assert abs(r.avg_price - r.sum_base_price / r.count_order) < 1e-6
 
 
-def test_pricing_micro_agg_parity(spark, monkeypatch):
-    """r14 prep for the flagship's two-level exact-micros flip (the
-    8.8x decimal-aggregation tax measured at the 60M-row tier,
-    .probe_registered_1000x_b4_r14.json): with ``_PRICING_MICRO_AGG``
-    on (the r15 registered surface), values must equal the pre-r15
-    decimal path exactly on testdata at BOTH gate SFs, the registered
-    micro oracle must equal the micro path against live DuckDB, and
-    the micro plan must carry no precision>18 decimal aggregation."""
+# The plain decimal(38,6) formulation of the flagship — the exact
+# reference the micro-sum path must equal on testdata.
+_PRICING_DECIMAL_SQL = """
+    SELECT l_returnflag, l_linestatus,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)                        AS sum_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)                   AS sum_base_price,
+           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS sum_disc_price,
+           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(38,6))) AS DOUBLE) AS sum_charge,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*)      AS avg_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS avg_price,
+           CAST(SUM(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / count(*)      AS avg_disc,
+           count(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
+    GROUP BY l_returnflag, l_linestatus
+"""
+
+
+def test_pricing_micro_agg_parity(spark):
+    """The flagship's two-level exact-micros aggregate (the 8.8x
+    decimal-aggregation tax it avoids was measured at the 60M-row
+    tier) must equal the plain decimal(38,6) SQL exactly on testdata at
+    BOTH gate SFs, run on DuckDB; the registered micro oracle must
+    equal the Spark result too; and the plan must carry no
+    precision>18 decimal aggregation."""
     import duckdb
 
     from finance_pipeline_spark.operators import aggregates as agg
 
-    assert agg._PRICING_MICRO_AGG is True  # r15 registered surface
-    # oracle lockstep: the registered oracle follows the flag
     assert registry.QUERIES["agg_pricing_summary"].oracle_text() == (
         agg._PRICING_MICRO_ORACLE
     )
 
     fn = registry.QUERIES["agg_pricing_summary"].fn
     for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
-        monkeypatch.setattr(agg, "_PRICING_MICRO_AGG", False)
-        base = sorted(map(tuple, fn(spark, sf).collect()))
-        monkeypatch.setattr(agg, "_PRICING_MICRO_AGG", True)
         micro_df = fn(spark, sf)
         micro = sorted(map(tuple, micro_df.collect()))
-        assert len(base) > 0 and [r[:2] for r in base] == [r[:2] for r in micro]
-        for rb, rm in zip(base, micro):
-            for vb, vm in zip(rb[2:], rm[2:]):
-                assert float(vb) == float(vm), (rb, rm)
-
         con = duckdb.connect()
         con.execute(
             f"CREATE VIEW lineitem AS SELECT * FROM '{sf}/lineitem.parquet'"
         )
-        want = sorted(map(tuple, con.execute(agg._PRICING_MICRO_ORACLE).fetchall()))
-        for rm, rw in zip(micro, want):
-            assert rm[:2] == rw[:2]
-            for vm, vw in zip(rm[2:], rw[2:]):
-                assert float(vm) == float(vw), (rm, rw)
+        for sql in (_PRICING_DECIMAL_SQL, agg._PRICING_MICRO_ORACLE):
+            want = sorted(map(tuple, con.execute(sql).fetchall()))
+            assert len(want) > 0 and [r[:2] for r in want] == [r[:2] for r in micro]
+            for rm, rw in zip(micro, want):
+                for vm, vw in zip(rm[2:], rw[2:]):
+                    assert float(vm) == float(vw), (rm, rw)
 
     # plan contract: the micro path aggregates in longs + a tiny
     # decimal finish — no precision>18 decimal in the partial (level-1)

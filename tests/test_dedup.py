@@ -387,6 +387,22 @@ def test_star_components_empty_and_single_edge(spark):
     assert got == [(3, 3), (7, 3)]
 
 
+def test_label_sum_null_on_nonempty_labels_fails_loudly(spark):
+    """The min-label convergence probe compares label sums; a NULL sum
+    on a non-empty labels frame (decimal overflow with ANSI off, or a
+    null label) would equal the previous NULL and declare a false
+    fixpoint, so it raises. An empty frame's NULL sum is legitimate."""
+    import pytest
+
+    from finance_pipeline_spark.operators.dedup import _label_sum
+
+    schema = "u bigint, comp bigint"
+    assert _label_sum(spark.createDataFrame([(1, 1), (2, 1)], schema)) == 2
+    assert _label_sum(spark.createDataFrame([], schema)) is None
+    with pytest.raises(RuntimeError, match="label sum is NULL"):
+        _label_sum(spark.createDataFrame([(1, None), (2, None)], schema))
+
+
 def test_minhash_dropped_bucket_accounting_matches_planted_bucket(spark):
     """A planted boilerplate bucket (cap+1 identical docs) must vanish
     from the pair output AND appear in the accounting ledger with its

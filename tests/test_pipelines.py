@@ -181,11 +181,18 @@ def test_orchestrator_runs_all_three_independently(spark, tmp_path):
 def test_keyed_writer_first_wins_property(spark, tmp_path):
     """Property: for random overlapping batches, the table always holds
     exactly one row per distinct key ever written, and replaying any
-    batch is a no-op (accounting consistent throughout)."""
+    batch is a no-op (accounting consistent throughout). The first
+    batch is crafted: one key twice with conflicting values — the
+    in-batch duplicate is skipped and counted, not inserted."""
     rng = random.Random(13)
     path = str(tmp_path / "t")
     seen_keys: set[tuple] = set()
-    batches = []
+    batches = [
+        [
+            ("USD", dt.datetime(2025, 5, 1, 10), 1.1),
+            ("USD", dt.datetime(2025, 5, 1, 10), 2.2),
+        ]
+    ]
     for _ in range(5):
         batch = [
             (
@@ -205,11 +212,12 @@ def test_keyed_writer_first_wins_property(spark, tmp_path):
         assert stats.inserted == len(new_keys)
         assert stats.skipped == len(batch) - len(new_keys)
         seen_keys |= new_keys
-        table_keys = {
+        table_keys = [
             (r.currency, r.timestamptz)
             for r in read_table(spark, path).select("currency", "timestamptz").collect()
-        }
-        assert table_keys == seen_keys
+        ]
+        assert len(table_keys) == len(seen_keys)  # one row per key
+        assert set(table_keys) == seen_keys
     # Full replay of everything: no-op.
     all_rows = [r for b in batches for r in b]
     df = spark.createDataFrame(
@@ -220,26 +228,8 @@ def test_keyed_writer_first_wins_property(spark, tmp_path):
     assert drop_table(path) and not table_exists(path)
 
 
-def test_keyed_table_merge_seam(spark, tmp_path):
-    """KeyedTable.merge == idempotent_append behind a swappable
-    interface (the Delta-MERGE seam): insert-new, skip-dupe, account."""
-    from finance_pipeline_spark.sinks.keyed_writer import KeyedTable
-
-    t = KeyedTable(spark, str(tmp_path / "t"), ["currency", "timestamptz"])
-    df = spark.createDataFrame(
-        [("USD", dt.datetime(2025, 5, 1, 10), 1.1), ("USD", dt.datetime(2025, 5, 1, 10), 2.2)],
-        "currency string, timestamptz timestamp, exchange_rate double",
-    )
-    s1 = t.merge(df)
-    assert (s1.inserted, s1.skipped) == (1, 1)  # in-batch dup skipped
-    s2 = t.merge(df)
-    assert (s2.inserted, s2.skipped) == (0, 2)  # replay is a no-op
-    assert t.read().count() == 1
-    assert t.drop() and not t.exists()
-
-
 def test_concurrent_writers_fail_loudly(spark, tmp_path):
-    """The single-writer boundary of the parquet KeyedTable is now
+    """The single-writer boundary of the parquet keyed table is now
     ENFORCED, not just documented: a second writer attempting a keyed
     append while the lock is held gets ConcurrentWriteError (the
     double-fired-cron case), instead of the silent double-insert the

@@ -205,7 +205,9 @@ def test_parquet_row_count_memo_keys_on_file_identity(tmp_path):
     """r17 footer-count memo: same file → one footer read (memoized);
     a REWRITTEN file (new size/mtime) re-counts — the memo must never
     serve a stale count, because sizing helpers derive shuffle widths
-    from it."""
+    from it. A directory dataset re-counts when a part file inside it
+    is rewritten in place, which leaves the directory's own stat
+    unchanged."""
     import pandas as pd
 
     from finance_pipeline_spark.registry import _ROW_COUNT_MEMO, parquet_row_count
@@ -219,3 +221,11 @@ def test_parquet_row_count_memo_keys_on_file_identity(tmp_path):
 
     pd.DataFrame({"a": range(25)}).to_parquet(p)  # rewrite in place
     assert parquet_row_count(str(p)) == 25  # new identity, re-counted
+
+    d = tmp_path / "ds.parquet"
+    d.mkdir()
+    pd.DataFrame({"a": range(4)}).to_parquet(d / "part-0.parquet")
+    pd.DataFrame({"a": range(6)}).to_parquet(d / "part-1.parquet")
+    assert parquet_row_count(str(d)) == 10
+    pd.DataFrame({"a": range(30)}).to_parquet(d / "part-1.parquet")
+    assert parquet_row_count(str(d)) == 34  # part rewritten in place

@@ -492,20 +492,14 @@ def test_ivfpq_scaled_recall_vs_exact_and_nprobe_dial(spark, tmp_path):
     assert r_wide >= r_derived - 1e-9, (r_wide, r_derived)
 
 
-def test_kmeans_decimal_means_partitioning_independent(spark, monkeypatch):
-    """r14 prep for the r15 similarity-kernel spread: with
-    ``_KMEANS_DECIMAL_MEANS`` on, the Lloyd centroid update is exact
-    and order-free (9-dp pre-round -> decimal(38,12) sum -> one divide
-    -> 6-dp round), so ANY input partitioning yields bit-identical
-    centroids — the property the spread needs before it can land.
-    Also pins the flag's default (ON since the r15 flip) and
-    near-parity with the float AVG path (<= one 6-dp ulp per
-    coordinate)."""
+def test_kmeans_decimal_means_partitioning_independent(spark):
+    """The Lloyd centroid update is exact and order-free (9-dp
+    pre-round -> exact decimal sum -> one divide -> 6-dp round), so ANY
+    input partitioning yields bit-identical centroids — the property
+    the similarity-kernel input spread relies on."""
     import numpy as np
 
     from finance_pipeline_spark.operators import similarity as sim
-
-    assert sim._KMEANS_DECIMAL_MEANS is True  # r15 registered surface
 
     rng = np.random.default_rng(41)
     mat = rng.standard_normal((600, _DIM)).astype(np.float32)
@@ -514,76 +508,82 @@ def test_kmeans_decimal_means_partitioning_independent(spark, monkeypatch):
     ]
     e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
 
-    monkeypatch.setattr(sim, "_KMEANS_DECIMAL_MEANS", False)
-    cents_float, _ = sim.kmeans_fit(spark, e, 8, rounds=2)
-
-    monkeypatch.setattr(sim, "_KMEANS_DECIMAL_MEANS", True)
     cents_a, _ = sim.kmeans_fit(spark, e.repartition(1), 8, rounds=2)
     cents_b, _ = sim.kmeans_fit(spark, e.repartition(13), 8, rounds=2)
     assert np.array_equal(cents_a, cents_b), "decimal means must be order-free"
 
-    # near-parity with the default float path: both round the same mean
-    # to 6 dp, so coordinates agree except at round-boundary values,
-    # where they differ by exactly one 6-dp step
-    diff = np.abs(cents_a - cents_float).max()
-    assert diff <= 1.000001e-6, f"decimal vs float mean drifted {diff}"
+
+def _duck_embeddings(rows):
+    """DuckDB connection holding ``rows`` = [(vec_id, float32-valued
+    list)] as ``embeddings(vec_id BIGINT, embedding FLOAT[])`` — the
+    same values the Spark side reads as array<float>."""
+    import duckdb
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    con.register("embeddings", pa.table({
+        "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+        "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+    }))
+    return con
 
 
-def test_probe_cells_kernel_bit_parity(spark, monkeypatch):
-    """r14 prep for the r15 _probe_cells flip (r13 verdict item 4):
-    the executor-side Arrow kernel must select EXACTLY the cells the
-    JVM crossJoin+window recipe selects — same sequential-fold
-    distance (np.add.accumulate vs F.aggregate's acc+x chain), same
-    HALF_UP-on-shortest-repr rounding (Decimal(repr) vs Spark Round's
-    BigDecimal.valueOf), same cluster-asc tie-break — over random
-    float32 queries plus crafted tie centroids (an exact duplicate
-    and a 1e-9 perturbation that collapses at 4 dp). The flag is
-    default-ON since the r15 flip: registered queries run the Arrow
-    kernel, and this test keeps it pinned bit-identical to the JVM
-    reference recipe."""
+def test_probe_cells_kernel_bit_parity(spark):
+    """The executor-side probe kernel must select EXACTLY the cells the
+    oracles' SQL recipe selects — ``round(list_sum((x - c)^2), 4)``
+    ranked by (distance, cluster), run on DuckDB — over random float32
+    queries plus crafted tie centroids (an exact duplicate and a 1e-9
+    perturbation that collapses at 4 dp), with extra columns riding
+    through."""
+    import duckdb
     import numpy as np
+    import pyarrow as pa
 
     from finance_pipeline_spark.operators import similarity as S
-
-    assert S._PROBE_CELLS_KERNEL is True  # r15 contract: kernel is live
 
     rng = np.random.default_rng(13)
     dim, k = 16, 7
     cents = rng.standard_normal((k, dim))
     cents[3] = cents[1] + 1e-9  # rounds to the same 4-dp distance
     cents[5] = cents[2]  # exact duplicate: pure cluster tie-break
+    rows = [
+        (i, rng.standard_normal(dim).astype("float32").tolist(), float(i) / 7)
+        for i in range(200)
+    ]
     q = spark.createDataFrame(
-        [
-            (i, rng.standard_normal(dim).astype("float32").tolist(), float(i) / 7)
-            for i in range(200)
-        ],
-        "query_id bigint, q_emb array<float>, q_nrm double",
+        rows, "query_id bigint, q_emb array<float>, q_nrm double"
     )
-    monkeypatch.setattr(S, "_PROBE_CELLS_KERNEL", False)
+    con = duckdb.connect()
+    con.register("q", pa.table({
+        "query_id": pa.array([r[0] for r in rows], pa.int64()),
+        "q_emb": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+        "q_nrm": pa.array([r[2] for r in rows], pa.float64()),
+    }))
+    con.register("c", pa.table({
+        "cluster": pa.array(range(k), pa.int64()),
+        "cent": pa.array(cents.tolist(), pa.list_(pa.float64())),
+    }))
     for nprobe in (1, 2, 3):
-        jvm = sorted(
-            (r.query_id, r.cluster, r.q_nrm)
-            for r in S._probe_cells(spark, cents, q, nprobe).collect()
+        want = sorted(
+            con.execute(f"""
+            SELECT query_id, cluster, q_nrm FROM (
+                SELECT q.query_id, c.cluster, q.q_nrm,
+                       row_number() OVER (PARTITION BY q.query_id ORDER BY
+                           round(list_sum(list_transform(
+                               CAST(q.q_emb AS DOUBLE[]),
+                               (x, i) -> (x - c.cent[i]) * (x - c.cent[i]))), 4),
+                           c.cluster) AS rnk
+                FROM q CROSS JOIN c
+            ) WHERE rnk <= {nprobe}""").fetchall()
         )
         kern = sorted(
             (r.query_id, r.cluster, r.q_nrm)
             for r in S._probe_cells_kernel(cents, q, nprobe).collect()
         )
-        assert jvm == kern, f"nprobe={nprobe}: first diff " + str(
-            next(iter(set(jvm) ^ set(kern)))
+        assert want == kern, f"nprobe={nprobe}: first diff " + str(
+            next(iter(set(want) ^ set(kern)))
         )
-        assert len(jvm) == 200 * nprobe
-    # the flag (default since r15) routes _probe_cells to the kernel
-    baseline = sorted(
-        (r.query_id, r.cluster)
-        for r in S._probe_cells(spark, cents, q, 2).collect()
-    )
-    monkeypatch.setattr(S, "_PROBE_CELLS_KERNEL", True)
-    flipped = sorted(
-        (r.query_id, r.cluster)
-        for r in S._probe_cells(spark, cents, q, 2).collect()
-    )
-    assert flipped == baseline
+        assert len(kern) == 200 * nprobe
 
 
 def test_probe_cells_rounding_replays_spark_round_exactly(spark):
@@ -719,46 +719,93 @@ def test_spark_round_scaled_parity(spark):
         )
 
 
-def test_lloyd_fused_matches_window_path(spark, monkeypatch):
-    """r16 optimization flip: the fused Lloyd kernel (one pass —
-    parity-rounded argmin assignment + per-task exact decimal partial
-    mean sums) must reproduce the window-form path BIT-FOR-BIT:
-    identical centroids after multiple rounds and identical
-    (vec_id, cluster, dist) assignment rows, across different input
-    partitionings."""
+# One more Lloyd update step on top of ``kmeans_lloyd_ctes`` (whose
+# chain ends at ``s2`` = distances to the round-1 centroids ``c1``): the
+# same assign -> exact-decimal 6-dp mean -> re-score recipe, giving the
+# round-2 centroids ``c2`` and distances ``s3``.
+_LLOYD_ROUND2_CTES = """, a2 AS (
+        SELECT vec_id, cluster FROM (
+            SELECT vec_id, cluster,
+                   row_number() OVER (PARTITION BY vec_id
+                                      ORDER BY d, cluster) AS rnk
+            FROM s2
+        ) WHERE rnk = 1
+    ), upd2 AS (
+        SELECT a2.cluster, generate_subscripts(v.emb, 1) AS pos,
+               unnest(v.emb) AS x
+        FROM a2 JOIN v USING (vec_id)
+    ), c2m AS (
+        SELECT cluster, pos,
+               round(CAST(sum(CAST(round(x, 9) AS DECIMAL(38,12))) AS DOUBLE)
+                     / count(*), 6) AS c
+        FROM upd2 GROUP BY cluster, pos
+    ), c2g AS (
+        SELECT cluster, list(c ORDER BY pos) AS emb FROM c2m GROUP BY cluster
+    ), c2 AS (
+        SELECT p.cluster, COALESCE(g.emb, p.emb) AS emb
+        FROM c1 p LEFT JOIN c2g g USING (cluster)
+    ), s3 AS (
+        SELECT v.vec_id, c.cluster,
+               round(list_sum(list_transform(
+                   v.emb, (x, i) -> (x - c.emb[i]) * (x - c.emb[i]))), 4) AS d
+        FROM v CROSS JOIN c2 c
+    )"""
+
+
+def test_lloyd_fused_matches_window_path(spark):
+    """The fused Lloyd kernel (one pass — parity-rounded argmin
+    assignment + per-task exact decimal partial mean sums) must
+    reproduce the DuckDB window-rank recipe BIT-FOR-BIT: identical
+    centroids and identical (vec_id, cluster, dist) assignment rows,
+    on a repartitioned input with duplicate vectors (assignment tie
+    pressure). rounds=1 is the registered ``kmeans_lloyd_ctes`` chain;
+    rounds=2 chains its update step once more."""
     import numpy as np
 
     from finance_pipeline_spark.operators import similarity as S
-
-    assert S._LLOYD_FUSED_KERNEL is True  # registered surface runs fused
 
     rng = np.random.default_rng(23)
     mat = rng.standard_normal((400, _DIM)).astype(np.float32)
     mat[7] = mat[3]  # exact duplicate vectors: assignment tie pressure
     rows = [(int(i + 1), [float(x) for x in mat[i]]) for i in range(len(mat))]
     e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    con = _duck_embeddings(rows)
 
-    for rounds in (1, 2):
-        monkeypatch.setattr(S, "_LLOYD_FUSED_KERNEL", False)
-        c_ref, a_ref = S.kmeans_fit(spark, e, 8, rounds=rounds)
-        ref = sorted(map(tuple, a_ref.collect()))
-        monkeypatch.setattr(S, "_LLOYD_FUSED_KERNEL", True)
+    for rounds, cents_cte, dist_cte, extra in (
+        (1, "c1", "s2", ""),
+        (2, "c2", "s3", _LLOYD_ROUND2_CTES),
+    ):
+        ctes = f"""WITH v AS (
+            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings
+        ), {S.kmeans_lloyd_ctes()}{extra}"""
+        ref = sorted(con.execute(S._mat(f"""{ctes}
+        SELECT vec_id, cluster, d AS dist FROM (
+            SELECT vec_id, cluster, d,
+                   row_number() OVER (PARTITION BY vec_id
+                                      ORDER BY d, cluster) AS rnk
+            FROM {dist_cte}
+        ) WHERE rnk = 1""")).fetchall())
+        c_ref = np.array([
+            emb for _, emb in con.execute(S._mat(
+                f"{ctes} SELECT cluster, emb FROM {cents_cte} ORDER BY cluster"
+            )).fetchall()
+        ])
         c_new, a_new = S.kmeans_fit(spark, e.repartition(5), 8, rounds=rounds)
         new = sorted(map(tuple, a_new.collect()))
         assert np.array_equal(c_ref, c_new), f"rounds={rounds}: centroids drift"
         assert ref == new, f"rounds={rounds}: assignments drift"
 
 
-def test_pq_fused_matches_row_path(spark, monkeypatch, tmp_path):
-    """r16 optimization flip for the PQ family: the fused mean-update /
-    codes kernels must reproduce the row-form chain exactly — both the
-    Spark-parity flavor (_pq_build, oracle-checked via ann_pq_topk) and
-    the numpy-round flavor (_pq_assign_codes / the scaled trainer)."""
+def test_pq_fused_matches_row_path(spark, tmp_path):
+    """The fused PQ mean-update / codes kernels in both rounding
+    flavors: the Spark-parity flavor (``_pq_build``) must reproduce
+    ``ann_pq_topk``'s registered DuckDB oracle row-for-row, and the
+    numpy-round flavor (the scaled tier) must equal a numpy argmin
+    replica (4-dp ``np.round``, lowest code on ties)."""
+    import duckdb
     import numpy as np
 
     from finance_pipeline_spark.operators import similarity as S
-
-    assert S._PQ_FUSED_KERNEL is True  # registered surface runs fused
 
     rng = np.random.default_rng(29)
     n = 300
@@ -766,30 +813,36 @@ def test_pq_fused_matches_row_path(spark, monkeypatch, tmp_path):
     ids = list(range(1, n + 1))  # ids 100/200/300 become the queries
     sf = write_embeddings(tmp_path, ids, mat)
 
-    monkeypatch.setattr(S, "_PQ_FUSED_KERNEL", False)
-    ref = sorted(map(tuple, S.ann_pq_topk(spark, sf).collect()))
-    monkeypatch.setattr(S, "_PQ_FUSED_KERNEL", True)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet'"
+    )
+    ref = sorted(con.execute(
+        registry.QUERIES["ann_pq_topk"].oracle_text()
+    ).fetchall())
     new = sorted(map(tuple, S.ann_pq_topk(spark, sf).collect()))
     assert ref == new and len(ref) > 0
 
     # numpy-round flavor: codes for a synthetic codebook
     e = registry.load(spark, sf, "embeddings").select("vec_id", "embedding")
     cents = rng.standard_normal((S._PQ_M, 8, S._PQ_DSUB))
-    monkeypatch.setattr(S, "_PQ_FUSED_KERNEL", False)
-    ref_codes = sorted(map(tuple, S._pq_assign_codes(spark, e, cents).collect()))
-    monkeypatch.setattr(S, "_PQ_FUSED_KERNEL", True)
-    new_codes = sorted(map(tuple, S._pq_assign_codes(spark, e, cents).collect()))
+    x = mat.astype(np.float32).astype(np.float64).reshape(n, S._PQ_M, S._PQ_DSUB)
+    d = ((x[:, :, None, :] - cents[None, :, :, :]) ** 2).sum(axis=3)
+    codes = np.round(d, 4).argmin(axis=2)  # argmin: lowest code wins ties
+    ref_codes = sorted((i, *map(int, c)) for i, c in zip(ids, codes))
+    new_codes = sorted(map(tuple, S._pq_codes_kernel(
+        spark, e, cents, spark_parity=False
+    ).collect()))
     assert ref_codes == new_codes and len(ref_codes) == n
 
 
 def test_train_scaled_quantizers_fused_matches_sequential(spark):
-    """r17 trainer-collapse pin: the fused `_train_scaled_quantizers`
-    (one seed collect + one fused coarse/PQ kernel pass + coarse round
-    2) must be BIT-IDENTICAL to the sequential composition it replaced
-    — `kmeans_fit(hashed_ids, k_cells, rounds=2)` for the coarse side
-    and `_pq_train_scaled` for the PQ side, both still living in the
-    module (ann_pq_topk uses the latter). Any drift in the shared seed
-    order, the fused partials, or the decimal mean recipe trips this."""
+    """The fused `_train_scaled_quantizers` (one seed collect + one
+    fused coarse/PQ kernel pass + coarse round 2) must be BIT-IDENTICAL
+    to the sequential composition — `kmeans_fit(hashed_ids, k_cells,
+    rounds=2)` for the coarse side and `_pq_train_scaled` for the PQ
+    side. Any drift in the shared seed order, the fused partials, or
+    the decimal mean recipe trips this."""
     import numpy as np
     from pyspark.sql import functions as F
 
