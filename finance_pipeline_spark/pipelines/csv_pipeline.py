@@ -1,11 +1,15 @@
 """CSV window-load pipeline (etl/csv_loader.py:263-287, §3.2).
 
-One lazy Catalyst chain replaces the reference's two-hop
+One Catalyst chain replaces the reference's two-hop
 CSV→CSV→DataFrame flow: scan → date-parse(coerce) → window filter →
 dedup → null-drop → positive-rate filter → derive timestamptz — the
-window predicate sits directly on the scan (pushdown), and the
-intermediate windowed CSV is written only as an optional debug
-artifact, never re-read.
+window predicate sits directly on the scan (pushdown). The cleaned
+window is computed once per run (``localCheckpoint(eager=True)``); the
+empty-input guard, the debug CSV (the reference's intermediate file,
+written but never re-read) and the keyed append all read the
+checkpointed rows. So the history file is scanned once, and
+``current_date()`` is evaluated once: the debug CSV and the loaded
+table hold the same window even when a run straddles midnight UTC.
 """
 
 from __future__ import annotations
@@ -56,7 +60,8 @@ def run_csv_loading_process(
     except Exception as e:  # noqa: BLE001 — missing file = pipeline abort
         log.error("Raw CSV not readable: %s", e)
         return None
-    df = transform_history(raw, conf.months)
+    # One scan of the history file feeds the guard and both writers.
+    df = transform_history(raw, conf.months).localCheckpoint(eager=True)
     if df.isEmpty():
         log.warning("CSV window produced no rows")
         return None

@@ -5,8 +5,8 @@ etl/csv_loader.py:49,90); here every scan declares its schema — on a
 cluster, inference is an extra full pass over 100 TB and a schema
 drift hazard. The reference's empty-input guard (``df.empty``,
 etl/csv_loader.py:91-93) runs in ``pipelines.csv_pipeline`` as
-``isEmpty`` on the transformed window, which looks at the first
-non-empty partition only.
+``isEmpty`` on the checkpointed window, so it reads computed rows
+instead of scanning the file again.
 """
 
 from __future__ import annotations

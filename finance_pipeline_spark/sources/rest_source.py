@@ -9,22 +9,34 @@ Spark-native D9 map-explode: the payload lands as ONE row with a
 ``map<string,double>`` rates column, then ``explode`` fans it out —
 so the transform is a Catalyst plan, not driver-side pandas, and the
 same plan serves a 1-payload batch or a million-payload backfill.
+The payload row is an Arrow-built ``LocalRelation``
+(``sources.local_frame``), so the whole plan runs in the JVM and no
+action on the frame starts a Python worker.
 """
 
 from __future__ import annotations
 
 import json
+import re
 from collections.abc import Callable
+from datetime import date
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from finance_pipeline_spark.logging_utils import get_logger
+from finance_pipeline_spark.sources import local_frame
 
 log = get_logger(__name__)
 
 Fetcher = Callable[[], str]  # returns the raw JSON body
+
+_ISO_DATE = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
+_PAYLOAD_ROW = T.StructType(
+    [T.StructField("date_str", T.StringType()), T.StructField("rates", T.StringType())]
+)
 
 
 def file_fetcher(path: str | Path) -> Fetcher:
@@ -110,13 +122,26 @@ def rates_from_json(
     (etl/api_fetcher.py:72-82; constants etl/config.py:32-33) — done
     with ``to_utc_timestamp(.., "CET")`` so Catalyst owns the zone
     math, DST included.
+
+    The envelope is validated on the driver: ``ValueError`` unless
+    ``date`` is an ISO ``YYYY-MM-DD`` string naming a real day and
+    ``rates`` is a JSON object. Anything else would load rows with a
+    null ``date``/``timestamptz`` key, which the keyed writer's
+    anti-join never matches, so every replay would insert them again.
     """
-    payload = json.loads(raw_json)  # driver-side validation of the envelope
-    if "rates" not in payload or "date" not in payload:
+    payload = json.loads(raw_json)
+    if not isinstance(payload, dict) or "rates" not in payload or "date" not in payload:
         raise ValueError("payload missing 'rates'/'date'")
-    row = spark.createDataFrame(
-        [(payload["date"], json.dumps(payload["rates"]))], "date_str string, rates string"
-    )
+    day, rates = payload["date"], payload["rates"]
+    if not isinstance(day, str) or not _ISO_DATE.fullmatch(day):
+        raise ValueError(f"payload 'date' is not a YYYY-MM-DD string: {day!r}")
+    try:
+        date.fromisoformat(day)
+    except ValueError as e:
+        raise ValueError(f"payload 'date' is not a calendar day: {day!r}") from e
+    if not isinstance(rates, dict):
+        raise ValueError(f"payload 'rates' is not a JSON object: {type(rates).__name__}")
+    row = local_frame(spark, [[day], [json.dumps(rates)]], _PAYLOAD_ROW)
     exploded = row.select(
         "date_str",
         F.explode(F.from_json("rates", "map<string,double>")).alias(

@@ -6,7 +6,10 @@ The reference fetches one page and parses it with BeautifulSoup
 (no bs4 in this container) and comes in two shapes:
 
 - ``parse_page`` — driver-side, for the single-page daily pipeline
-  (scalar work; no reason to ship one page through the cluster);
+  (scalar work; no reason to ship one page through the cluster). The
+  parsed rows become an Arrow-built ``LocalRelation``
+  (``sources.local_frame``), so no action on the frame starts a
+  Python worker;
 - ``parse_pages`` — a ``mapInPandas`` kernel over a DataFrame of
   (url, html) rows: the 100 TB shape, where a crawl's pages are
   parsed partition-parallel with the same parser code.
@@ -24,6 +27,7 @@ from html.parser import HTMLParser
 from pyspark.sql import DataFrame, SparkSession
 
 from finance_pipeline_spark.logging_utils import get_logger
+from finance_pipeline_spark.sources import local_frame
 
 log = get_logger(__name__)
 
@@ -152,12 +156,13 @@ def parse_page(
         log.error("scrape: rates table missing or empty")
         if alert:
             alert("Exchange rates table not found.", "Scraping Error")
-        return spark.createDataFrame([], SCRAPED_ROW)
+        return local_frame(spark, [[]] * len(SCRAPED_ROW), SCRAPED_ROW)
     ts = page.timestamp.astimezone(timezone.utc).replace(tzinfo=None)
-    rows = [
-        (name, base_currency, rate, ts.date(), ts) for name, rate in page.rows
-    ]
-    return spark.createDataFrame(rows, SCRAPED_ROW)
+    n = len(page.rows)
+    names, rates = zip(*page.rows)
+    return local_frame(
+        spark, [names, [base_currency] * n, rates, [ts.date()] * n, [ts] * n], SCRAPED_ROW
+    )
 
 
 def parse_pages(pages: DataFrame, base_currency: str = "EUR") -> DataFrame:

@@ -153,6 +153,138 @@ def test_scrape_aborts_on_missing_timestamp_and_alerts_on_no_table(spark, tmp_pa
     assert any("Scraping Error" in subj for subj, _ in alerts)
 
 
+def _assert_jvm_leaf(df) -> None:
+    plan = df._jdf.queryExecution().toString()
+    assert "LocalRelation" in plan and "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        {"date": 20240101, "rates": {"USD": 1.1}},
+        {"date": None, "rates": {"USD": 1.1}},
+        {"date": "20240101", "rates": {"USD": 1.1}},
+        {"date": "2024-02-30", "rates": {"USD": 1.1}},
+        {"date": "2024-01-01", "rates": [["USD", 1.1]]},
+        {"date": "2024-01-01", "rates": None},
+        [{"date": "2024-01-01", "rates": {"USD": 1.1}}],
+    ],
+)
+def test_rest_envelope_rejected_and_replay_loads_no_null_keys(spark, tmp_path, payload):
+    """A payload whose ``date`` is not an ISO YYYY-MM-DD string or whose
+    ``rates`` is not an object is refused on the driver: it used to load
+    rows with a null date/timestamptz key, which the anti-join never
+    matches, so every replay inserted them again."""
+    from finance_pipeline_spark.pipelines.api_pipeline import run_api_process
+    from finance_pipeline_spark.sources.rest_source import fetch_rates, rates_from_json
+
+    body = json.dumps(payload)
+    with pytest.raises(ValueError):
+        rates_from_json(spark, body)
+    assert fetch_rates(spark, lambda: body) is None
+    conf = _conf(tmp_path, fetch_json=lambda: body)
+    for _ in range(2):  # first load, then the replay
+        stats = run_api_process(spark, conf)
+        assert stats is None or stats.inserted == 0
+    table = read_table(spark, conf.table(API_TABLE))
+    if table is not None:
+        assert table.filter("date IS NULL OR timestamptz IS NULL").count() == 0
+
+
+def _old_rest_frame(spark, payload: dict):
+    """The REST frame as it was built before: a Python-list leaf under
+    the same flatten and CET→UTC chain."""
+    row = spark.createDataFrame(
+        [(payload["date"], json.dumps(payload["rates"]))], "date_str string, rates string"
+    )
+    return row.select(
+        "date_str",
+        F.explode(F.from_json("rates", "map<string,double>")).alias("currency", "exchange_rate"),
+    ).select(
+        "currency",
+        F.lit("EUR").alias("base_currency"),
+        "exchange_rate",
+        F.to_date("date_str").alias("date"),
+        F.to_utc_timestamp(F.concat(F.col("date_str"), F.lit(" 16:00:00")), "CET").alias(
+            "timestamptz"
+        ),
+    )
+
+
+def test_source_frames_are_jvm_local_relations(spark):
+    """The REST and scrape frames are Arrow-built LocalRelations: no
+    Python-RDD leaf, so no action on them starts a Python worker. Their
+    rows equal the old Python-list construction, including 16:00 CET in
+    UTC on each side of both 2025 DST switches (30 Mar, 26 Oct)."""
+    from finance_pipeline_spark.schemas import SCRAPED_ROW
+    from finance_pipeline_spark.sources.rest_source import fetch_rates
+    from finance_pipeline_spark.sources.scrape_source import parse_html, parse_page
+
+    fixture = json.loads((FIXTURES / "frankfurter.json").read_text())
+    utc_hour = {"2025-03-28": 15, "2025-03-31": 14, "2025-10-24": 14, "2025-10-27": 15}
+    for day, hour in [(fixture["date"], 14), *utc_hour.items()]:
+        payload = {**fixture, "date": day}
+        df = fetch_rates(spark, lambda p=payload: json.dumps(p))
+        _assert_jvm_leaf(df)
+        rows = sorted(map(tuple, df.collect()))
+        assert rows == sorted(map(tuple, _old_rest_frame(spark, payload).collect()))
+        assert len(rows) == len(fixture["rates"])
+        assert {r[4] for r in rows} == {dt.datetime.fromisoformat(f"{day} {hour:02d}:00")}
+
+    html = (FIXTURES / "xrates.html").read_text()
+    df = parse_page(spark, html)
+    _assert_jvm_leaf(df)
+    page = parse_html(html)
+    ts = page.timestamp.replace(tzinfo=None)
+    old = spark.createDataFrame(
+        [(name, "EUR", rate, ts.date(), ts) for name, rate in page.rows], SCRAPED_ROW
+    )
+    assert df.schema == SCRAPED_ROW
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, old.collect()))
+    assert {r.timestamptz for r in df.collect()} == {dt.datetime(2025, 5, 8, 14, 30)}
+
+    no_table = '<span class="ratesTimestamp">May 08, 2025 14:30 UTC</span><p>no table</p>'
+    empty = parse_page(spark, no_table)
+    _assert_jvm_leaf(empty)
+    assert empty.schema == SCRAPED_ROW and empty.collect() == []
+
+
+def test_csv_pipeline_computes_one_window_per_run(spark, tmp_path, monkeypatch):
+    """The debug CSV and the keyed append read one computed window: the
+    frame both writers get no longer scans the history CSV, the debug
+    file and the inserted rows hold the same (currency, timestamptz)
+    set, and a replay inserts nothing."""
+    from finance_pipeline_spark.pipelines import csv_pipeline
+    from finance_pipeline_spark.schemas import HISTORY_ROW
+    from finance_pipeline_spark.sources.csv_source import read_csv
+
+    seen = []
+    for name in ("write_overwrite", "idempotent_append"):
+        original = getattr(csv_pipeline, name)
+
+        def spy(*args, _original=original):
+            seen.append(next(a for a in args if hasattr(a, "_jdf")))
+            return _original(*args)
+
+        monkeypatch.setattr(csv_pipeline, name, spy)
+
+    conf = _conf(tmp_path, raw_csv_path=_write_history_csv(tmp_path), months=1)
+    first = csv_pipeline.run_csv_loading_process(spark, conf)
+    assert first.inserted == 10
+    debug_df, loaded_df = seen
+    assert debug_df is loaded_df
+    assert "csv" not in debug_df._jdf.queryExecution().optimizedPlan().toString()
+
+    def keys(df):
+        return {(r.currency, r.timestamptz) for r in df.select("currency", "timestamptz").collect()}
+
+    debug = read_csv(spark, str(tmp_path / "processed" / "forex_rates_1m.csv"), HISTORY_ROW)
+    inserted = keys(read_table(spark, conf.table(HISTORY_TABLE)))
+    assert keys(debug) == inserted and len(inserted) == 10
+    replay = csv_pipeline.run_csv_loading_process(spark, conf)
+    assert replay.inserted == 0 and replay.skipped == 10
+
+
 def test_orchestrator_runs_all_three_independently(spark, tmp_path):
     conf = _conf(
         tmp_path,
