@@ -15,7 +15,9 @@ def get_logger(name: str = "finance_pipeline_spark") -> logging.Logger:
     if not _CONFIGURED:
         logging.basicConfig(
             level=logging.INFO,
-            format="%(asctime)s [%(levelname)s] %(message)s",
+            # threadName tells run_etl's concurrent sources apart
+            # (etl-api, etl-csv, etl-scrape).
+            format="%(asctime)s [%(levelname)s] %(threadName)s %(message)s",
             handlers=[logging.StreamHandler()],
         )
         _CONFIGURED = True

@@ -19,6 +19,9 @@ class PipelineConfig:
     months: int = 1  # CSV date window (etl/csv_loader.py:271)
     fetch_json: Callable[[], str] | None = None  # S4 REST edge
     fetch_html: Callable[[], str] | None = None  # S5 scrape edge
+    # run_etl runs the three sources concurrently: alert may be called
+    # from three driver threads at once, and sync_transport by the three
+    # sources' sync jobs at once. Both must tolerate concurrent calls.
     sync_transport: Callable[[list[dict]], None] | None = None  # K7 edge
     sync_lookback_minutes: int = 20  # services/supabase.py:57-61
     alert: Callable[[str, str], bool] | None = None  # M5 edge

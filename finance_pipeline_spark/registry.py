@@ -100,11 +100,12 @@ _SHIPPED_APPS: set[str] = set()
 # dir per PROCESS (not per SparkSession — the advisor found the
 # per-session mkdtemp leaked a dir every session construction), rebuilt
 # only when the package source actually changed (max mtime over *.py).
-# The lock serializes the stale-check/rmtree/assign sequence: two
-# threads constructing sessions concurrently must not rmtree the zip
-# the other just published (review finding r9).
 _FALLBACK_ZIP: "tuple[float, Path] | None" = None
-_FALLBACK_LOCK = __import__("threading").Lock()
+# Serializes ship_package's check-then-ship: threads of one process
+# (run_etl's source pipelines, sessions built concurrently) share the
+# per-pid staging zip, the fallback zip's stale-check/rmtree/assign
+# sequence and _SHIPPED_APPS, so only one of them may build and ship.
+_SHIP_LOCK = __import__("threading").Lock()
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -116,7 +117,12 @@ def ship_package(spark: SparkSession) -> None:
     real cluster submit would use (``--py-files``). Idempotent per
     SparkContext (keyed on applicationId — a fresh context in the same
     process needs its own addPyFile; addPyFile state dies with the
-    context)."""
+    context). Thread-safe: concurrent callers build and ship once."""
+    with _SHIP_LOCK:
+        _ship_package_locked(spark)
+
+
+def _ship_package_locked(spark: SparkSession) -> None:
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return
@@ -154,30 +160,27 @@ def ship_package(spark: SparkSession) -> None:
         import tempfile
 
         global _FALLBACK_ZIP
-        with _FALLBACK_LOCK:
-            tdir = None
-            try:
-                mtime = max(p.stat().st_mtime for p in pkg_root.rglob("*.py"))
-                if _FALLBACK_ZIP is not None and _FALLBACK_ZIP[0] == mtime:
-                    zpath = _FALLBACK_ZIP[1]
-                else:
-                    tdir = Path(tempfile.mkdtemp())
-                    zpath = tdir / "finance_pipeline_spark.zip"
-                    with zipfile.ZipFile(zpath, "w") as z:
-                        for p in sorted(pkg_root.rglob("*.py")):
-                            z.write(p, p.relative_to(pkg_root.parent))
-                    if _FALLBACK_ZIP is not None:
-                        # retire the stale zip's tempdir before re-pointing
-                        shutil.rmtree(
-                            _FALLBACK_ZIP[1].parent, ignore_errors=True
-                        )
-                    _FALLBACK_ZIP = (mtime, zpath)
-                    tdir = None  # published — ours no longer to clean
-            except OSError:
-                if tdir is not None:  # half-built zip dir: don't strand it
-                    shutil.rmtree(tdir, ignore_errors=True)
-                _SHIPPED_APPS.add(app_id)  # don't retry every call
-                return
+        tdir = None
+        try:
+            mtime = max(p.stat().st_mtime for p in pkg_root.rglob("*.py"))
+            if _FALLBACK_ZIP is not None and _FALLBACK_ZIP[0] == mtime:
+                zpath = _FALLBACK_ZIP[1]
+            else:
+                tdir = Path(tempfile.mkdtemp())
+                zpath = tdir / "finance_pipeline_spark.zip"
+                with zipfile.ZipFile(zpath, "w") as z:
+                    for p in sorted(pkg_root.rglob("*.py")):
+                        z.write(p, p.relative_to(pkg_root.parent))
+                if _FALLBACK_ZIP is not None:
+                    # retire the stale zip's tempdir before re-pointing
+                    shutil.rmtree(_FALLBACK_ZIP[1].parent, ignore_errors=True)
+                _FALLBACK_ZIP = (mtime, zpath)
+                tdir = None  # published — ours no longer to clean
+        except OSError:
+            if tdir is not None:  # half-built zip dir: don't strand it
+                shutil.rmtree(tdir, ignore_errors=True)
+            _SHIPPED_APPS.add(app_id)  # don't retry every call
+            return
     finally:
         if tmp is not None:  # the broad except above must not strand it
             try:

@@ -169,9 +169,11 @@ def _locked_append(
         deduped = incoming.dropDuplicates(keys)
     existing = read_table(spark, path)
     if existing is not None:
-        new_rows = deduped.join(
-            existing.select(*keys).dropDuplicates(keys), on=keys, how="left_anti"
-        )
+        # No dedup on the table side: a left-anti join drops a left row
+        # if ANY right row matches, so duplicate table keys cannot
+        # change the result (and the writer keeps the table unique per
+        # key anyway) — deduping would aggregate every key it holds.
+        new_rows = deduped.join(existing.select(*keys), on=keys, how="left_anti")
     else:
         new_rows = deduped
     # created_at ingest-audit column (DEFAULT CURRENT_TIMESTAMP in the

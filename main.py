@@ -807,7 +807,7 @@ def main(argv: list[str] | None = None) -> int:
     if argv and argv[0] == "corpus":
         return corpus_main(argv[1:])
     ap = argparse.ArgumentParser(
-        description="Run the finance ETL (API -> CSV -> scrape) end-to-end."
+        description="Run the finance ETL (API, CSV, scrape: concurrently)."
     )
     ap.add_argument("--warehouse", default="./warehouse",
                     help="parquet warehouse root (default ./warehouse)")

@@ -285,14 +285,19 @@ def test_csv_pipeline_computes_one_window_per_run(spark, tmp_path, monkeypatch):
     assert replay.inserted == 0 and replay.skipped == 10
 
 
-def test_orchestrator_runs_all_three_independently(spark, tmp_path):
-    conf = _conf(
+def _etl_conf(tmp_path) -> PipelineConfig:
+    """All three sources on the offline fixtures."""
+    tmp_path.mkdir(parents=True, exist_ok=True)
+    return _conf(
         tmp_path,
         raw_csv_path=_write_history_csv(tmp_path),
         fetch_json=file_fetcher(FIXTURES / "frankfurter.json"),
         fetch_html=lambda: (FIXTURES / "xrates.html").read_text(),
     )
-    result = run_etl(spark, conf)
+
+
+def test_orchestrator_runs_all_three_independently(spark, tmp_path):
+    result = run_etl(spark, _etl_conf(tmp_path))
     assert result["api"].inserted == 13
     assert result["csv"].inserted == 10
     assert result["scrape"].inserted == 6
@@ -308,6 +313,196 @@ def test_orchestrator_runs_all_three_independently(spark, tmp_path):
     assert result2["api"] is None
     assert result2["csv"].inserted == 10
     assert result2["scrape"].inserted == 6
+
+
+def _processed_files(conf: PipelineConfig) -> dict:
+    """Each processed CSV dataset → the sorted lines of its part files."""
+    return {
+        d.name: sorted(
+            line for part in d.glob("part-*.csv") for line in part.read_text().splitlines()
+        )
+        for d in Path(conf.processed_dir).iterdir()
+    }
+
+
+def test_concurrent_etl_matches_sequential_run(spark, tmp_path):
+    """run_etl's concurrent sources load the same tables and processed
+    CSVs as the three pipelines run one after another, and the result
+    keys come back in api, csv, scrape order."""
+    from finance_pipeline_spark.pipelines import (
+        run_api_process,
+        run_csv_loading_process,
+        run_web_scrapping_process,
+    )
+
+    conc, seq = _etl_conf(tmp_path / "conc"), _etl_conf(tmp_path / "seq")
+    result = run_etl(spark, conc)
+    assert list(result) == ["api", "csv", "scrape"]
+    assert result == {
+        "api": run_api_process(spark, seq),
+        "csv": run_csv_loading_process(spark, seq),
+        "scrape": run_web_scrapping_process(spark, seq),
+    }
+    for table in (API_TABLE, HISTORY_TABLE, SCRAPED_TABLE):
+        conc_rows, seq_rows = (
+            sorted(read_table(spark, c.table(table)).drop("created_at").collect(), key=str)
+            for c in (conc, seq)
+        )
+        assert conc_rows and conc_rows == seq_rows, table
+    assert len(_processed_files(conc)) == 3
+    assert _processed_files(conc) == _processed_files(seq)
+
+
+def test_etl_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Every Spark job of the three source threads runs under the job
+    group the caller set, which run_etl leaves in place."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("etl-caller", "run_etl under a caller's job group")
+    try:
+        result = run_etl(spark, _etl_conf(tmp_path))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "etl-caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert all(result.values())
+    assert len(tracker.getJobIdsForGroup("etl-caller")) >= 10
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def test_raising_source_lets_the_others_finish(spark, tmp_path, monkeypatch, caplog):
+    """A pipeline that raises does not stop the other two: run_etl
+    re-raises only once they are done, and when several raise, the
+    first in api, csv, scrape order wins whatever order they failed in;
+    the others are logged."""
+    import threading
+    import time
+
+    import finance_pipeline_spark.pipelines as pipelines
+
+    def api_down(spark, conf):
+        raise RuntimeError("api down")
+
+    monkeypatch.setattr(pipelines, "run_api_process", api_down)
+    conf = _etl_conf(tmp_path)
+    with pytest.raises(RuntimeError, match="api down"):
+        run_etl(spark, conf)
+    assert not [t for t in threading.enumerate() if t.name.startswith("etl-")]
+    assert read_table(spark, conf.table(API_TABLE)) is None
+    assert read_table(spark, conf.table(HISTORY_TABLE)).count() == 10
+    assert read_table(spark, conf.table(SCRAPED_TABLE)).count() == 6
+
+    def api_late(spark, conf):
+        time.sleep(0.5)
+        raise RuntimeError("api late")
+
+    def scrape_early(spark, conf):
+        raise ValueError("scrape early")
+
+    monkeypatch.setattr(pipelines, "run_api_process", api_late)
+    monkeypatch.setattr(pipelines, "run_csv_loading_process", lambda spark, conf: None)
+    monkeypatch.setattr(pipelines, "run_web_scrapping_process", scrape_early)
+    with pytest.raises(RuntimeError, match="api late"):
+        run_etl(spark, conf)
+    assert "ETL:scrape pipeline raised as well" in caplog.text
+    assert "scrape early" in caplog.text
+
+
+def test_ship_package_ships_once_from_concurrent_threads(spark, monkeypatch):
+    """Three threads of one process calling ship_package at once (the
+    source pipelines under run_etl) build the package zip once, leave
+    no staging file behind and publish a valid zip."""
+    import os
+    import sys
+    import threading
+    import zipfile
+
+    from finance_pipeline_spark import registry
+
+    builds = []
+    real_zip = zipfile.ZipFile
+
+    class CountingZip(real_zip):
+        def __init__(self, file, mode="r", *args, **kwargs):
+            if mode == "w":
+                builds.append(file)
+            super().__init__(file, mode, *args, **kwargs)
+
+    monkeypatch.setattr(zipfile, "ZipFile", CountingZip)
+    monkeypatch.setattr(registry, "_SHIPPED_APPS", set())
+    barrier = threading.Barrier(3)
+    errors = []
+
+    def ship():
+        barrier.wait()
+        try:
+            registry.ship_package(spark)
+        except Exception as e:  # noqa: BLE001 — collected and asserted on
+            errors.append(e)
+
+    threads = [threading.Thread(target=ship) for _ in range(3)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(builds) == 1
+    assert spark.sparkContext.applicationId in registry._SHIPPED_APPS
+    cache = Path(registry.__file__).resolve().parent.parent / ".cache"
+    assert not list(cache.glob(f".finance_pipeline_spark.{os.getpid()}.zip.tmp"))
+    with real_zip(cache / "finance_pipeline_spark.zip") as z:
+        assert z.testzip() is None
+        assert "finance_pipeline_spark/registry.py" in z.namelist()
+
+
+def _sql_executions(spark):
+    return spark._jsparkSession.sharedState().statusStore().executionsList()
+
+
+def _executions_after(spark, execution_id: int) -> list:
+    """SQL executions (status store, newest first) with a larger id."""
+    execs = _sql_executions(spark)
+    out = []
+    for i in range(execs.size() - 1, -1, -1):
+        ex = execs.apply(i)
+        if ex.executionId() <= execution_id:
+            break
+        out.append(ex)
+    return out
+
+
+def test_keyed_append_does_not_aggregate_the_table_keys(spark, tmp_path):
+    """The anti-join reads the table's keys as they are: the executed
+    write of an append against an existing table holds no aggregate (a
+    dropDuplicates there would shuffle every key the table holds)."""
+    path = str(tmp_path / "t")
+    schema = "currency string, timestamptz timestamp, exchange_rate double"
+    keys = ["currency", "timestamptz"]
+
+    def batch(days):
+        rows = [(c, dt.datetime(2025, 5, d, 10), 1.0 + d) for c in ("USD", "GBP") for d in days]
+        return spark.createDataFrame(rows, schema)
+
+    idempotent_append(spark, batch(range(1, 8)), path, keys)
+    execs = _sql_executions(spark)
+    before = execs.apply(execs.size() - 1).executionId()
+    stats = idempotent_append(spark, batch([*range(5, 11), 10]), path, keys)
+    assert (stats.inserted, stats.skipped) == (6, 8)
+    writes = [
+        ex.physicalPlanDescription()
+        for ex in _executions_after(spark, before)
+        if "InsertIntoHadoopFsRelationCommand" in ex.physicalPlanDescription()
+    ]
+    assert len(writes) == 1
+    assert "LeftAnti" in writes[0]
+    assert "Aggregate" not in writes[0], writes[0]
 
 
 def test_keyed_writer_first_wins_property(spark, tmp_path):
